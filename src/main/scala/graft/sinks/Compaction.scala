@@ -7,9 +7,12 @@ import org.apache.spark.sql.functions.col
   *
   * [[ParquetAppendSink]] buys replay idempotence with one `__batch_id`
   * partition per micro-batch — which at a 20 s cadence is 4 320
-  * directories a day, each holding tiny files: the classic streaming
-  * small-files problem, and at 100 TB the thing that actually kills
-  * scan performance (footer-per-file costs, driver listing time).
+  * directories a day per table. Each holds up to `defaultParallelism`
+  * small files: the row-skipping query sink coalesces its cached batch
+  * to that many partitions, and AQE sizes the uncached writes. That is
+  * the classic streaming small-files problem, and at 100 TB the thing
+  * that actually kills scan performance (footer-per-file costs, driver
+  * listing time).
   * Compaction is the standard maintenance move: periodically rewrite
   * CLOSED batches into few large files. Replay protection is only
   * needed for batches the running query could still retry, so dropping

@@ -23,6 +23,11 @@ import org.apache.spark.sql.functions.col
 trait BatchSink extends Serializable {
   def write(df: DataFrame, batchId: Long): Unit
 }
+object BatchSink {
+  /** Persist in at most `defaultParallelism` partitions: AQE cannot shrink a cached plan. */
+  def cacheCoalesced(df: DataFrame): DataFrame =
+    df.coalesce(df.sparkSession.sparkContext.defaultParallelism).persist()
+}
 
 /** Config-driven output projection: (sourceColumn → outputName); empty
   * output name drops the column, mirroring clickhouse.go:124-137. */
@@ -107,20 +112,15 @@ final class RowSkippingSink(inner: BatchSink,
                             deadLetter: Option[BatchSink] = None)
     extends BatchSink {
   override def write(df: DataFrame, batchId: Long): Unit = {
-    // the upstream plan (decode + aggregation on the streaming hot path)
-    // must not re-execute once per consumer: cache the batch, run the
-    // cheap emptiness probe and both writes against the cached frame
-    val persisted = df.persist()
+    val persisted = BatchSink.cacheCoalesced(df) // the upstream plan runs once
     try {
       // null-safe split: a predicate evaluating to NULL (e.g. a length
       // test over a NULL column) matches neither filter(p) nor
       // filter(!p) — such rows must dead-letter, not silently vanish
       val ok = valid.eqNullSafe(org.apache.spark.sql.functions.lit(true))
-      deadLetter.foreach { dl =>
-        val bad = persisted.filter(!ok)
-        if (!bad.isEmpty) dl.write(bad, batchId)
-      }
       inner.write(persisted.filter(ok), batchId)
+      val bad = persisted.filter(!ok) // counted after the write fills the cache
+      deadLetter.foreach(dl => if (bad.count() > 0) dl.write(bad, batchId))
     } finally { persisted.unpersist(); () }
   }
 }

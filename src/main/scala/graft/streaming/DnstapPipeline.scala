@@ -91,32 +91,27 @@ object DnstapPipeline {
     val queries = Seq.newBuilder[StreamingQuery]
 
     if (needAgg) {
-      val bothBranches = cfg.clientQueries && cfg.nonOkClientResponses
       val q = frames.writeStream
         .queryName("graft-dnstap-agg")
         .option("checkpointLocation", s"$checkpointRoot/agg")
         .trigger(trigger(cfg.writeIntervalSecs))
         .foreachBatch { (batch: Dataset[Array[Byte]], batchId: Long) =>
-          // decode each raw frame once per trigger; when both branches are
-          // enabled the decoded frames are cached so the response pass
-          // doesn't re-run protobuf+DNS-wire parsing over the same bytes
-          val decoded = batch.flatMap(b => DnstapCodec.decode(b).toSeq)
-          val persisted = if (bothBranches) decoded.persist() else decoded
-          try {
-            if (cfg.clientQueries) {
-              val rows = persisted.flatMap(DnstapRows.toQueryRows(_)).toDF()
-              sinks.queries.write(aggregateQueries(rows, cfg), batchId)
-            }
-            if (cfg.nonOkClientResponses) {
-              // keepSuccess=false here is Fl4+Fl5: NOERROR rows never reach
-              // the aggregation branch even when the sample branch keeps
-              // them (that branch decodes its own stream below).
-              val rows = persisted
-                .flatMap(DnstapRows.toResponseRows(_, keepSuccess = false))
-                .toDF()
-              sinks.responses.write(aggregateResponses(rows, cfg), batchId)
-            }
-          } finally if (bothBranches) { persisted.unpersist(); () }
+          // each branch decodes the raw frames straight to its rows: a
+          // second protobuf+DNS-wire pass costs less than caching decoded
+          // frames through an encoder only to flatten them again
+          if (cfg.clientQueries) {
+            val rows = batch.flatMap(b =>
+              DnstapCodec.decode(b).toSeq.flatMap(DnstapRows.toQueryRows(_))).toDF()
+            sinks.queries.write(aggregateQueries(rows, cfg), batchId)
+          }
+          if (cfg.nonOkClientResponses) {
+            // keepSuccess=false here is Fl4+Fl5: NOERROR rows never reach
+            // the aggregation branch even when the sample branch keeps
+            // them (that branch decodes its own stream below).
+            val rows = batch.flatMap(b => DnstapCodec.decode(b).toSeq
+              .flatMap(DnstapRows.toResponseRows(_, keepSuccess = false))).toDF()
+            sinks.responses.write(aggregateResponses(rows, cfg), batchId)
+          }
         }
         .start()
       queries += q
@@ -167,7 +162,7 @@ object DnstapPipeline {
               floor(sum(col("deltaMicros")) / count(lit(1)))
                 .as("responseTimeMicroSec"),
               count(lit(1)).as("matches"))
-          val persisted = agg.cache()
+          val persisted = graft.sinks.BatchSink.cacheCoalesced(agg)
           try {
             val total = persisted.agg(sum(col("matches"))).collect()
               .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))

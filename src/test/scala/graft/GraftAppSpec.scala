@@ -91,9 +91,15 @@ class GraftAppSpec extends SparkSpec {
          |QuestionTypeColumn = ""
          |""".stripMargin)
 
-    val queries = GraftApp.start(spark, cfg,
-      outputDir = s"$root/out", checkpointDir = s"$root/ckpt",
-      instantTriggers = true)
+    // more shuffle partitions than cores, as in a deployment (a streaming
+    // query keeps the session conf it started with): each batch's query
+    // table must still get at most one file per core
+    val cores = spark.sparkContext.defaultParallelism
+    val queries = withShufflePartitions(8 * cores) {
+      GraftApp.start(spark, cfg,
+        outputDir = s"$root/out", checkpointDir = s"$root/ckpt",
+        instantTriggers = true)
+    }
     try {
       // wait for the socket, then stream frames like a dnstap emitter
       val deadline = System.nanoTime() + 30L * 1000000000L
@@ -104,15 +110,19 @@ class GraftAppSpec extends SparkSpec {
       FrameStreams.writeControlFrame(out, FrameStreams.ControlStart,
         Seq(FrameStreams.ContentTypeDnstap))
       val a = Array[Byte](10, 0, 0, 1)
-      FrameStreams.writeDataFrame(out,
-        frame(isResponse = false, a, 1000, 1, "x.example.", 0, 1000L))
+      // one query per name, enough keys to spread over every shuffle partition
+      val names = "x.example." +: (0 until 40).map(i => s"n$i.example.")
+      names.zipWithIndex.foreach { case (n, i) =>
+        FrameStreams.writeDataFrame(out,
+          frame(isResponse = false, a, 1000, 1 + i, n, 0, 1000L))
+      }
       FrameStreams.writeDataFrame(out,
         frame(isResponse = true, a, 1000, 1, "x.example.", 3, 1001L))
       FrameStreams.writeControlFrame(out, FrameStreams.ControlStop)
       conn.close()
 
-      // poll the query table (grouping-set agg -> 3 rows for one key);
-      // data files live under __batch_id=N partition dirs — walk the tree
+      // poll the query table (grouping-set agg -> 2 rows per name plus the
+      // address row); data files live under __batch_id=N partition dirs
       def hasParquet(dir: String): Boolean = {
         val p = Paths.get(dir)
         if (!Files.exists(p)) false
@@ -146,23 +156,32 @@ class GraftAppSpec extends SparkSpec {
             lastPollErr = Some(e)
             Array.empty[org.apache.spark.sql.Row]
         }
+      // frames may split over several batches, each aggregated on its
+      // own: compare per-key counter sums across batches
+      def sums(got: Array[org.apache.spark.sql.Row]) =
+        got.groupMapReduce(r => (r.getAs[String]("identity"), r.getAs[String]("client"),
+          r.getAs[String]("questionName")))(_.getAs[Long]("counter"))(_ + _)
+      val expected = names.flatMap(n => Seq(("srv1", "10.0.0.1", n) -> 1L,
+        ("srv1", "__ANY__", n) -> 1L)).toMap + (("srv1", "10.0.0.1", "__ANY__") -> 41L)
       val end = System.nanoTime() + 90L * 1000000000L
-      while (rows().length < 3 && System.nanoTime() < end) Thread.sleep(200)
+      while (sums(rows()) != expected && System.nanoTime() < end) Thread.sleep(200)
 
       val got = rows()
-      assert(got.length >= 3,
-        s"query sink not ready after 90s; last swallowed poll error: " +
+      assert(sums(got) == expected,
+        s"query sink incomplete after 90s; last swallowed poll error: " +
           lastPollErr.fold("none")(_.toString))
       // projection applied: renamed address column, dropped question type;
       // __batch_id is the idempotent sink's delivery-lineage partition
       assert(got.head.schema.fieldNames.toSeq ==
         Seq("queryTime", "identity", "client", "questionName", "counter",
           "__batch_id"))
-      assert(got.map(r => (r.getAs[String]("identity"), r.getAs[String]("client"),
-        r.getAs[String]("questionName"), r.getAs[Long]("counter"))).toSet ==
-        Set(("srv1", "10.0.0.1", "x.example.", 1L),
-            ("srv1", "10.0.0.1", "__ANY__", 1L),
-            ("srv1", "__ANY__", "x.example.", 1L)))
+      // at most one parquet file per core in each batch's partition
+      val batchDirs = Files.list(Paths.get(qDir))
+      try batchDirs.filter(_.getFileName.toString.startsWith("__batch_id=")).forEach { d =>
+        val files = Files.list(d)
+        val n = try files.filter(_.toString.endsWith(".parquet")).count() finally files.close()
+        assert(n <= cores, s"$d holds $n parquet files with $cores cores")
+      } finally batchDirs.close()
 
       // response table got the NXDOMAIN row under its default name
       val rDir = s"$root/out/clientResponse"
@@ -179,6 +198,9 @@ class GraftAppSpec extends SparkSpec {
       assert(rCount() == 3,
         s"response sink count mismatch; last swallowed poll error: " +
           lastPollErr.fold("none")(_.toString))
+      // the response write follows the query write's dead-letter step in
+      // the same batch, so a clean input has left no dead-letter table
+      assert(!Files.exists(Paths.get(s"$root/out/_dead_letter")))
     } finally queries.foreach(_.stop())
   }
 }

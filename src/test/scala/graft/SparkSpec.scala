@@ -13,4 +13,14 @@ trait SparkSpec extends AnyFunSuite {
     .config(SparkTuning.ExcludedRulesKey, SparkTuning.ExcludedRules)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Run `body` with `spark.sql.shuffle.partitions` at `n`, then restore
+    * it. The fixture's 4 partitions equal its 4 cores, which hides any
+    * plan that keeps every shuffle partition. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, old)
+  }
 }

@@ -64,6 +64,67 @@ class SinksSpec extends SparkSpec {
     assert(dead.rows.size == 1)
   }
 
+  test("row-skipping sink hands each sink at most defaultParallelism partitions") {
+    import org.apache.spark.sql.functions.col
+    val cores = spark.sparkContext.defaultParallelism
+    withShufflePartitions(8 * cores) {
+      // the aggregate comes out at 8×cores shuffle partitions; a cached
+      // copy would keep them all, since AQE cannot coalesce a cached plan
+      val agg = spark.range(0, 1000).groupBy((col("id") % 100).as("k")).count()
+      for (firstValid <- Seq(0L, 10L)) { // a clean batch, then 10 bad rows
+        val delivered = new CollectingSink()
+        val dead = new CollectingSink()
+        val (in, dl) = (new PartitionRecordingSink(delivered), new PartitionRecordingSink(dead))
+        new RowSkippingSink(in, col("k") >= firstValid, Some(dl)).write(agg, 0L)
+        assert(delivered.rows.size == 100 - firstValid && dead.rows.size == firstValid)
+        assert(in.partitions.size == 1 && dl.partitions.size == (if (firstValid > 0) 1 else 0))
+        assert((in.partitions ++ dl.partitions).forall(_ <= cores),
+          s"partitions seen: ${in.partitions} / ${dl.partitions}, cores: $cores")
+      }
+    }
+  }
+
+  test("row-skipping sink runs the upstream plan once per write, retries included") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val runs = spark.sparkContext.longAccumulator("upstream rows")
+    // rows [from, until) with the ids in `bad` carrying a NULL value;
+    // every upstream execution of a row bumps `runs`
+    def batch(from: Long, until: Long, bad: Set[Long]): DataFrame =
+      spark.range(from, until).as[Long]
+        .map { i => runs.add(1); (i, if (bad(i)) None else Some(s"v$i")) }
+        .toDF("id", "v")
+    def writeOnce(sink: BatchSink, from: Long, until: Long, bad: Set[Long]): Unit = {
+      runs.reset()
+      sink.write(batch(from, until, bad), 0L)
+      assert(runs.value == until - from, "the upstream plan ran more than once")
+    }
+    def ids(s: CollectingSink) = s.rows.map(_.getLong(0)).sorted
+    val delivered = new CollectingSink()
+    val dead = new CollectingSink()
+    val s = new RowSkippingSink(delivered, col("v").isNotNull, Some(dead))
+    writeOnce(s, 0L, 50L, Set.empty)
+    assert(ids(delivered) == (0L until 50L) && dead.rows.isEmpty)
+    writeOnce(s, 50L, 100L, Set(60L, 70L))
+    assert(ids(dead) == Seq(60L, 70L)) // each dead letter written exactly once
+
+    // the first delivery attempt reads the whole batch, then fails; the
+    // retry and the dead-letter count are served from the filled cache
+    var attempts = 0
+    val flaky = new BatchSink {
+      override def write(df: DataFrame, batchId: Long): Unit = {
+        attempts += 1
+        if (attempts == 1) { df.collect(); throw new RuntimeException("sink down") }
+        delivered.write(df, batchId)
+      }
+    }
+    delivered.clear(); dead.clear()
+    writeOnce(new RowSkippingSink(new RetryingSink(flaky, sleep = _ => ()),
+      col("v").isNotNull, Some(dead)), 100L, 120L, Set(110L))
+    assert(attempts == 2)
+    assert(ids(delivered) == (100L until 120L).filter(_ != 110L) && ids(dead) == Seq(110L))
+  }
+
   test("referencePolicy: query leg skips bad rows, response leg aborts the batch") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
 import graft.codec.{DnsWire, DnstapCodec}
-import graft.sinks.{CollectingSink, ColumnProjection}
+import graft.sinks.{CollectingSink, ColumnProjection, PartitionRecordingSink}
 
 /** End-to-end drive of the full streaming topology (SURVEY §3): raw dnstap
   * frames through a MemoryStream source → decode/parse/explode → W1
@@ -108,11 +108,19 @@ class DnstapPipelineSpec extends SparkSpec {
     val sSink = new CollectingSink(
       ColumnProjection(Seq("responseTime" -> "", "identity" -> "identity",
         "responseTimeMicroSec" -> "delta_us", "counter" -> "counter")))
-    run(DnstapPipeline.Config(clientQueries = false,
-        nonOkClientResponses = false, adaptiveSampling = false),
-      DnstapPipeline.Sinks(new CollectingSink(), new CollectingSink(), sSink)) {
-      sSink.rows.nonEmpty
+    val recorded = new PartitionRecordingSink(sSink)
+    // more shuffle partitions than cores: the cached per-identity
+    // aggregate must still reach the sink in at most one per core
+    val cores = spark.sparkContext.defaultParallelism
+    withShufflePartitions(4 * cores) {
+      run(DnstapPipeline.Config(clientQueries = false,
+          nonOkClientResponses = false, adaptiveSampling = false),
+        DnstapPipeline.Sinks(new CollectingSink(), new CollectingSink(), recorded)) {
+        sSink.rows.nonEmpty
+      }
     }
+    assert(recorded.partitions.nonEmpty && recorded.partitions.forall(_ <= cores),
+      s"samples sink saw ${recorded.partitions} partitions with $cores cores")
 
     // one matched sample, integer-division average, projected columns
     assert(sSink.columns == Seq("identity", "delta_us", "counter"))
