@@ -143,15 +143,14 @@ object Bench {
     // aborts: on a genuinely busy box the bench still runs, flagged.
     val loadGate = sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE", "4.0").toDouble
     val loadWaitSecs = sys.env.getOrElse("SPARK_GRAFT_LOAD_WAIT_SECS", "180").toInt
-    def gateLoad(section: String, gate: Double = loadGate): Double = {
+    def gateLoad(section: String): Unit = {
       var waited = 0
       var l = loadAvg()
-      while (l > gate && waited < loadWaitSecs) {
+      while (l > loadGate && waited < loadWaitSecs) {
         Thread.sleep(10000); waited += 10; l = loadAvg()
       }
       emit(s"""{"detail":"load_gate","section":"$section","load1m":${
-        BigDecimal(l).setScale(2, BigDecimal.RoundingMode.HALF_UP)},"waited_secs":$waited,"gated":${l <= gate}}""")
-      l
+        BigDecimal(l).setScale(2, BigDecimal.RoundingMode.HALF_UP)},"waited_secs":$waited,"gated":${l <= loadGate}}""")
     }
 
     /** The timed action: FULL row materialization, not count(). Under
@@ -325,126 +324,6 @@ object Bench {
     if (isoAll.nonEmpty)
       emit(s"""{"detail":"isolated_rerun","queries":${toJson(isoAll)}}""")
 
-    // ingest→aggregate→sink throughput of the reference pipeline
-    // (BASELINE.md:34-36's rows/s line): dnstap frames from the events
-    // table pushed through the unix-socket framestream source into the
-    // W1 grouping-set branch and counting sinks. One untimed warm run
-    // (streaming-plan codegen + query startup), then the timed feed.
-    // SPARK_GRAFT_PIPELINE_BENCH=0 disables; SPARK_GRAFT_PIPELINE_FRAMES
-    // sets the sustained feed size (default 4M frames ≈ 10 s).
-    // BEST of SPARK_GRAFT_PIPELINE_TRIALS (default 2) feeds, each
-    // load-gated and recorded per-trial (r16, VERDICT #1): this is the
-    // one measured BASELINE.md contract line, and a single trial let a
-    // load artifact become the number of record (280,577 vs 190,241
-    // rows/s for identical code). Best-of — not min-of — because
-    // contention only ever DEFLATES throughput.
-    // SPARK_GRAFT_PIPELINE_TRIALS <= 0 is an explicit skip (ADVICE r17:
-    // with 0 the old `if (trials <= 1) trials` made maxTrials 0, the
-    // trial loop never ran, and runs.maxBy threw on the empty Vector —
-    // swallowed into a misleading {"error":"UnsupportedOperationException"}
-    // journal line); a skip must journal AS a skip
-    val pipelineTrialsReq =
-      sys.env.getOrElse("SPARK_GRAFT_PIPELINE_TRIALS", "3").toInt
-    val (pipe, pipeCarried): (Option[PipelineThroughput.Result], Boolean) =
-      if (sys.env.getOrElse("SPARK_GRAFT_PIPELINE_BENCH", "1") == "0")
-        (None, false)
-      else if (pipelineTrialsReq <= 0) {
-        emit(s"""{"detail":"pipeline","skipped":"SPARK_GRAFT_PIPELINE_TRIALS=$pipelineTrialsReq"}""")
-        (None, false)
-      } else try {
-        PipelineThroughput.run(spark, sfDir, targetFrames = 1L)
-        val frames =
-          sys.env.getOrElse("SPARK_GRAFT_PIPELINE_FRAMES", "4000000").toLong
-        // 3 trials (r16): with 2, same-day best-of runs still spread 13%
-        // (262,838 vs 297,427 rows/s) — the headline total reproduces
-        // within 6% but this line needed one more sample; ~15 s each.
-        // SPREAD DEFENSE (r17, VERDICT #3): the r16 driver run accepted
-        // a best-of-3 whose trials spread 30% (two ~207k trials under
-        // load1m 3.1–3.9, "gated" under the 4.0 threshold) — 15% below
-        // the same code's idle best. Two changes: pipeline trials gate
-        // STRICTER (these are 15 s trials; default 2.5, override with
-        // SPARK_GRAFT_PIPELINE_LOAD_GATE), and the best is accepted
-        // only once the TOP TWO trials agree within 15% — otherwise
-        // extra gated trials run, up to SPARK_GRAFT_PIPELINE_MAX_TRIALS
-        // (default 6), so an uncorroborated best never becomes the
-        // number of record without the journal showing the chase.
-        val trials = pipelineTrialsReq
-        // an EXPLICIT single-trial request is a quick local check — the
-        // agreement chase must not turn it into six 15 s feeds; the
-        // spread defense applies from 2 trials up
-        val maxTrials =
-          if (trials <= 1) 1
-          else math.max(trials,
-            sys.env.getOrElse("SPARK_GRAFT_PIPELINE_MAX_TRIALS", "6").toInt)
-        val pipeGate =
-          sys.env.getOrElse("SPARK_GRAFT_PIPELINE_LOAD_GATE", "2.5").toDouble
-        // the journal band BEFORE this run's trials land: the yardstick
-        // a sub-band trial is judged against for anomaly attribution
-        // (r19, VERDICT #2 — the r18 closing run's 37.5k rows/s trial
-        // was a mystery its journal could not adjudicate)
-        val band = BenchJournal.newestAgreeingPipeline(sidecar)
-          .map(_.rowsPerSec)
-        var runs = Vector.empty[PipelineThroughput.Result]
-        def top2Agree: Boolean = {
-          val top = runs.map(_.rowsPerSec).sorted.reverse.take(2)
-          top.size >= 2 && (top(0) - top(1)) / top(0) <= 0.15
-        }
-        while (runs.size < trials || (!top2Agree && runs.size < maxTrials)) {
-          val i = runs.size + 1
-          val l = gateLoad(s"pipeline_trial_$i", pipeGate)
-          val r = PipelineThroughput.run(spark, sfDir, frames)
-          emit(f"""{"detail":"pipeline_trial","trial":$i,"rows_per_sec":${r.rowsPerSec}%.0f,"secs":${BigDecimal(r.secs).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"batches":${r.batches},"load1m":${BigDecimal(l).setScale(2, BigDecimal.RoundingMode.HALF_UP)}}""")
-          // >2x below the newest agreeing band: journal the per-batch
-          // progress so feed/agg/sink stalls are distinguishable
-          BenchJournal.pipelineAnomalyLine(i, r, band).foreach(emit)
-          runs = runs :+ r
-        }
-        val r = runs.maxBy(_.rowsPerSec)
-        if (top2Agree || runs.size <= 1) {
-          emit(f"""{"detail":"pipeline","rows_per_sec":${r.rowsPerSec}%.0f,"frames":${r.frames},"secs":${BigDecimal(r.secs).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"query_agg_rows":${r.queryAggRows},"response_agg_rows":${r.responseAggRows},"batches":${r.batches},"trials":${runs.size},"top2_within_15pct":$top2Agree}""")
-          (Some(r), false)
-        } else {
-          // NUMBER-OF-RECORD convention (r18, VERDICT #1): a best whose
-          // top-2 trials never agreed within 15% is a non-reproducing
-          // point — r17 published 173,586 rows/s from exactly such a
-          // run while the same code had three same-day agreeing runs at
-          // 253-281k. When the chase exhausts maxTrials without
-          // agreement, the number of record is the newest AGREEING
-          // "detail":"pipeline" line already in the journal (never a
-          // carried one — a box that drifted must not echo an ancient
-          // number forever), or NOTHING: the chase's trials stay
-          // journaled for attribution either way.
-          emit(f"""{"detail":"pipeline_no_agreement","best_rows_per_sec":${r.rowsPerSec}%.0f,"trials":${runs.size},"spread":${
-            runs.map(_.rowsPerSec).sorted.reverse.take(2) match {
-              case Seq(a, b) => BigDecimal((a - b) / a).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-              case _ => BigDecimal(0)
-            }}}""")
-          val carried = BenchJournal.newestAgreeingPipeline(sidecar)
-          carried.foreach { c =>
-            emit(f"""{"detail":"pipeline","rows_per_sec":${c.rowsPerSec}%.0f,"frames":${c.frames},"secs":${BigDecimal(c.secs).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"trials":${runs.size},"top2_within_15pct":false,"carried_from_journal":true}""")
-          }
-          if (carried.isEmpty)
-            emit(s"""{"detail":"pipeline","error":"no_agreeing_run"}""")
-          (carried, carried.nonEmpty)
-        }
-      } catch {
-        case e: Throwable =>
-          // EXCEPTION CARRY (r19, VERDICT #1): the no-agreement path
-          // already falls back to the journal, but the r18 closing
-          // run's trial threw and this catch published NOTHING — the
-          // round's final artifact lost the one measured BASELINE
-          // contract line while three agreeing same-HEAD numbers sat in
-          // its own journal. Same convention here: journal the failure
-          // (message included), then carry the newest agreeing line,
-          // flagged with its provenance AND the error that forced it.
-          emit(s"""{"detail":"pipeline",${errFields(e)}}""")
-          val carried = BenchJournal.newestAgreeingPipeline(sidecar)
-          carried.foreach { c =>
-            emit(f"""{"detail":"pipeline","rows_per_sec":${c.rowsPerSec}%.0f,"frames":${c.frames},"secs":${BigDecimal(c.secs).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"top2_within_15pct":false,"carried_from_journal":true,"carry_reason":"${e.getClass.getSimpleName}"}""")
-          }
-          (carried, carried.nonEmpty)
-      }
-
     // WordPiece distributed-trainer price (r15, VERDICT item 7): the
     // over-ledger fallback is SERIAL — one distributed job per merge
     // (scores move globally with symbol counts; WordPiece.scala:55-60)
@@ -496,12 +375,6 @@ object Bench {
     // driver's ~2 KB tail-capture window
     val isoHead = isoAll.filter(_._2 >= 0).sortBy(-_._2).take(10)
     val isoJson = if (isoHead.isEmpty) "" else s""","slowest_isolated":${toJson(isoHead)}"""
-    // provenance in the HEADLINE, not only the detail line (r18 ADVICE):
-    // tooling reading the last line alone must not mistake a journal-
-    // carried prior measurement for this run's own
-    val pipeJson = pipe.map(r =>
-      f""","pipeline_rows_per_sec":${r.rowsPerSec}%.0f,"pipeline_frames":${r.frames},"pipeline_secs":${BigDecimal(r.secs).setScale(3, BigDecimal.RoundingMode.HALF_UP)}${
-        if (pipeCarried) ""","pipeline_carried":true""" else ""}""").getOrElse("")
     // BOX-NORMALIZED TOTAL (r19, VERDICT #6): the calibration probes are
     // journaled but nothing read them — round-over-round totals still
     // compared raw across a box whose speed drifts by days (r18's A/B
@@ -527,27 +400,20 @@ object Bench {
           BigDecimal(runCal).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"total_normalized":${
           BigDecimal(total * refCal / runCal).setScale(3, BigDecimal.RoundingMode.HALF_UP)}"""
       }.getOrElse("")
-    emit(s"""{"metric":"total","value":$totalStr,"unit":"sec","action":"materialize","sf":"$sfDir","nqueries":${results.size},"errors":$errorsJson,"load1m":$load,"slowest":${toJson(slowest)}$pipeJson$isoJson$normJson}""")
+    emit(s"""{"metric":"total","value":$totalStr,"unit":"sec","action":"materialize","sf":"$sfDir","nqueries":${results.size},"errors":$errorsJson,"load1m":$load,"slowest":${toJson(slowest)}$isoJson$normJson}""")
     spark.stop()
   }
 }
 
-/** Sidecar-journal reads the bench main falls back on — split out so
-  * the fallback convention is spec-testable without running a bench. */
+/** Sidecar-journal helpers of the bench main: the JSON escape for
+  * error messages and the pinned reference-calibration read. Split out
+  * so both are spec-testable without running a bench. */
 private[graft] object BenchJournal {
 
-  /** Newest genuinely-MEASURED agreeing pipeline line in the journal:
-    * `"detail":"pipeline"` with `top2_within_15pct` true and not itself
-    * carried (a drifted box must not echo an ancient number forever) —
-    * the number of record when a chase exhausts its trials without
-    * top-2 agreement (r18, VERDICT #1). Field order matches the bench
-    * emit; agg-row/batch fields are not recovered (they only feed the
-    * already-journaled detail line). Never throws: an unreadable or
-    * absent journal is simply no fallback. */
   /** Minimal JSON string escape for journal lines: backslash, quote,
     * and control characters — exception messages routinely carry quotes
     * and newlines, and one unescaped message must not corrupt the
-    * line-oriented journal every fallback read depends on. */
+    * line-oriented journal every read depends on. */
   def jsonEscape(s: String): String = {
     val b = new StringBuilder(s.length + 8)
     s.foreach {
@@ -579,44 +445,6 @@ private[graft] object BenchJournal {
           .flatMap(re.findFirstMatchIn(_))
           .map(_.group(1).toDouble)
           .nextOption()
-      }
-    } catch { case _: Throwable => None }
-
-  /** The anomaly-attribution line (r19, VERDICT #2): when a pipeline
-    * trial lands more than 2x BELOW the newest agreeing journal band,
-    * one line of per-batch progress (rows, trigger wall, committed
-    * offset) is worth the whole diagnosis — a feed stall shows starved
-    * batches, an agg stall shows few slow ones, a sink stall shows the
-    * offset frozen. Capped at the last 64 batches so the line stays
-    * journal-sized. None = in-band, nothing to attribute. */
-  def pipelineAnomalyLine(trial: Int, r: PipelineThroughput.Result,
-                          bandRowsPerSec: Option[Double]): Option[String] =
-    bandRowsPerSec.filter(b => b > 0 && r.rowsPerSec < b / 2).map { b =>
-      val batches = r.batchProgress.takeRight(64).map(p =>
-        s"""{"batch":${p.batchId},"rows":${p.rows},"ms":${p.ms},"offset":${p.offset}}""")
-        .mkString("[", ",", "]")
-      f"""{"detail":"pipeline_anomaly","trial":$trial,"rows_per_sec":${
-        r.rowsPerSec}%.0f,"band_rows_per_sec":$b%.0f,"secs":${
-        BigDecimal(r.secs).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"n_batches":${
-        r.batchProgress.size},"batches":$batches}"""
-    }
-
-  def newestAgreeingPipeline(path: String): Option[PipelineThroughput.Result] =
-    if (path.isEmpty) None
-    else try {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p)) None
-      else {
-        val re = ("\"detail\":\"pipeline\",\"rows_per_sec\":([0-9.]+)," +
-          "\"frames\":([0-9]+),\"secs\":([0-9.]+)").r.unanchored
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(p).asScala.iterator
-          .filter(l => l.contains("\"top2_within_15pct\":true") &&
-            !l.contains("carried_from_journal"))
-          .flatMap(re.findFirstMatchIn(_))
-          .foldLeft(Option.empty[PipelineThroughput.Result])((_, m) =>
-            Some(PipelineThroughput.Result(m.group(2).toLong,
-              m.group(3).toDouble, m.group(1).toDouble, 0L, 0L, 0L)))
       }
     } catch { case _: Throwable => None }
 }

@@ -72,8 +72,16 @@ final class DnstapSocketScan(options: CaseInsensitiveStringMap) extends Scan {
     val readers = math.min(
       Option(options.get("readers")).map(_.toInt).getOrElse(1),
       DnstapSocketSource.MaxReaders)
-    val maxFrames = Option(options.get("maxFramesPerTrigger")).map(_.toLong)
-    val maxFrameBytes = Option(options.get("maxFrameBytes")).map(_.toInt)
+    // a non-positive row limit never advances the offset, and a
+    // non-positive frame cap rejects every frame, handshake included
+    def positive[T: Numeric](key: String, parse: String => Option[T]): Option[T] =
+      Option(options.get(key)).map { str =>
+        parse(str).filter(Numeric[T].gt(_, Numeric[T].zero)).getOrElse(
+          throw new IllegalArgumentException(
+            s"Invalid value '$str' for option '$key', must be a positive integer"))
+      }
+    val maxFrames = positive("maxFramesPerTrigger", _.toLongOption)
+    val maxFrameBytes = positive("maxFrameBytes", _.toIntOption)
       .getOrElse(FrameStreams.DefaultMaxFrameBytes)
     // reference Dnstap.ReadTimeout (toml.go:75, applied dnstap.go:193-198):
     // a connection delivering no frame within the timeout is dropped,

@@ -1,50 +1,18 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The pipeline number-of-record fallback convention (r18, VERDICT #1):
-  * when a chase exhausts its trials without top-2 agreement, the bench
-  * publishes the newest MEASURED agreeing journal line — never a
-  * non-reproducing best, never a line that was itself carried. */
+/** The bench journal's helpers: error messages escape into valid
+  * journal lines, and the reference calibration that normalizes totals
+  * is pinned by the first matching journal line. */
 class BenchJournalSpec extends AnyFunSuite {
 
   private def journal(lines: String*): String = {
     val f = Files.createTempFile("bench_journal", ".jsonl")
     Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     f.toString
-  }
-
-  private def pipeLine(rps: Int, agree: Boolean, carried: Boolean = false) =
-    s"""{"detail":"pipeline","rows_per_sec":$rps,"frames":4000000,""" +
-      s""""secs":14.2,"query_agg_rows":10,"response_agg_rows":10,""" +
-      s""""batches":3,"trials":3,"top2_within_15pct":$agree""" +
-      (if (carried) ""","carried_from_journal":true}""" else "}")
-
-  test("newest agreeing line wins; non-agreeing and carried lines are " +
-    "never the fallback") {
-    val p = journal(
-      pipeLine(281510, agree = true),
-      pipeLine(253245, agree = true),
-      pipeLine(347150, agree = false), // spread-flagged best: excluded
-      pipeLine(299999, agree = false, carried = true)) // echo: excluded
-    val got = BenchJournal.newestAgreeingPipeline(p)
-    assert(got.map(_.rowsPerSec) === Some(253245.0),
-      "fallback must be the NEWEST measured agreeing line")
-    assert(got.map(_.frames) === Some(4000000L))
-    assert(got.map(_.secs) === Some(14.2))
-  }
-
-  test("carried lines marked agreeing are still excluded (the no-echo " +
-    "rule keys on provenance, not the agreement flag)") {
-    val p = journal(
-      pipeLine(100000, agree = true),
-      s"""{"detail":"pipeline","rows_per_sec":999999,"frames":1,""" +
-        s""""secs":1.0,"trials":6,"top2_within_15pct":true,""" +
-        s""""carried_from_journal":true}""")
-    assert(BenchJournal.newestAgreeingPipeline(p)
-      .map(_.rowsPerSec) === Some(100000.0))
   }
 
   test("jsonEscape: quotes, backslashes, newlines and control bytes in " +
@@ -83,50 +51,5 @@ class BenchJournalSpec extends AnyFunSuite {
     assert(math.abs(total * refCal / runCalSlow - 100.0) < 1e-9)
     val runCalSame = 1.6
     assert(math.abs(total * refCal / runCalSame - total) < 1e-9)
-  }
-
-  test("pipelineAnomalyLine: fires only >2x below the band, carries the " +
-    "per-batch progress, and stays silent with no band or in-band") {
-    val prog = Seq(
-      PipelineThroughput.BatchProg(0L, 120000L, 900L, 120000L),
-      PipelineThroughput.BatchProg(1L, 3000L, 2500L, 123000L))
-    val r = PipelineThroughput.Result(4000000L, 106.5, 37558.7,
-      10L, 10L, 2L, prog)
-    val line = BenchJournal.pipelineAnomalyLine(1, r, Some(282220.0))
-    assert(line.nonEmpty, "7.5x below the band must journal an anomaly")
-    val s = line.get
-    assert(s.contains("\"detail\":\"pipeline_anomaly\""))
-    assert(s.contains("\"band_rows_per_sec\":282220"))
-    assert(s.contains("\"rows_per_sec\":37559"))
-    assert(s.contains(
-      """{"batch":1,"rows":3000,"ms":2500,"offset":123000}"""))
-    // in-band (above band/2): silent
-    assert(BenchJournal.pipelineAnomalyLine(1,
-      r.copy(rowsPerSec = 200000.0), Some(282220.0)).isEmpty)
-    // no band yet: nothing to be anomalous AGAINST
-    assert(BenchJournal.pipelineAnomalyLine(1, r, None).isEmpty)
-    // batch list caps at the last 64 entries
-    val many = (0 until 200).map(i =>
-      PipelineThroughput.BatchProg(i.toLong, 10L, 5L, i * 10L))
-    val capped = BenchJournal.pipelineAnomalyLine(2,
-      r.copy(batchProgress = many), Some(282220.0)).get
-    assert(capped.contains("\"n_batches\":200"))
-    assert(!capped.contains("\"batch\":135,"), "older than last-64 kept")
-    assert(capped.contains("\"batch\":199,"))
-  }
-
-  test("no journal, empty path, no agreeing line, or garbage content " +
-    "mean NO fallback — never a throw") {
-    assert(BenchJournal.newestAgreeingPipeline("") === None)
-    assert(BenchJournal.newestAgreeingPipeline(
-      "/nonexistent/bench.jsonl") === None)
-    assert(BenchJournal.newestAgreeingPipeline(
-      journal(pipeLine(5, agree = false))) === None)
-    assert(BenchJournal.newestAgreeingPipeline(
-      journal("not json at all", """{"detail":"queries"}""")) === None)
-    // a directory path is unreadable as a file: swallowed, None
-    val dir = Files.createTempDirectory("bench_journal_dir").toString
-    assert(BenchJournal.newestAgreeingPipeline(dir) === None)
-    Files.deleteIfExists(Paths.get(dir))
   }
 }

@@ -3,6 +3,11 @@ package graft
 import java.net.UnixDomainSocketAddress
 import java.nio.channels.{Channels, SocketChannel}
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.concurrent.{blocking, Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 import graft.codec.{DnsWire, DnstapCodec}
 import graft.config.GraftConfig
@@ -105,21 +110,33 @@ class GraftAppSpec extends SparkSpec {
       val deadline = System.nanoTime() + 30L * 1000000000L
       while (!Files.exists(Paths.get(sock)) && System.nanoTime() < deadline)
         Thread.sleep(50)
-      val conn = SocketChannel.open(UnixDomainSocketAddress.of(sock))
-      val out = Channels.newOutputStream(conn)
-      FrameStreams.writeControlFrame(out, FrameStreams.ControlStart,
-        Seq(FrameStreams.ContentTypeDnstap))
       val a = Array[Byte](10, 0, 0, 1)
       // one query per name, enough keys to spread over every shuffle partition
       val names = "x.example." +: (0 until 40).map(i => s"n$i.example.")
-      names.zipWithIndex.foreach { case (n, i) =>
-        FrameStreams.writeDataFrame(out,
-          frame(isResponse = false, a, 1000, 1 + i, n, 0, 1000L))
+      // two connections write at the same time, alternating names, so both
+      // pooled readers feed the one frame buffer concurrently; connection 0
+      // also carries the NXDOMAIN response
+      val started = new CountDownLatch(2)
+      val emitters = (0 until 2).map { c =>
+        Future {
+          val conn = SocketChannel.open(UnixDomainSocketAddress.of(sock))
+          try {
+            val out = Channels.newOutputStream(conn)
+            FrameStreams.writeControlFrame(out, FrameStreams.ControlStart,
+              Seq(FrameStreams.ContentTypeDnstap))
+            started.countDown()
+            blocking(started.await(30, TimeUnit.SECONDS))
+            names.zipWithIndex.filter(_._2 % 2 == c).foreach { case (n, i) =>
+              FrameStreams.writeDataFrame(out,
+                frame(isResponse = false, a, 1000, 1 + i, n, 0, 1000L))
+            }
+            if (c == 0) FrameStreams.writeDataFrame(out,
+              frame(isResponse = true, a, 1000, 1, "x.example.", 3, 1001L))
+            FrameStreams.writeControlFrame(out, FrameStreams.ControlStop)
+          } finally conn.close()
+        }
       }
-      FrameStreams.writeDataFrame(out,
-        frame(isResponse = true, a, 1000, 1, "x.example.", 3, 1001L))
-      FrameStreams.writeControlFrame(out, FrameStreams.ControlStop)
-      conn.close()
+      Await.result(Future.sequence(emitters), 30.seconds)
 
       // poll the query table (grouping-set agg -> 2 rows per name plus the
       // address row); data files live under __batch_id=N partition dirs

@@ -5,6 +5,7 @@ import java.net.UnixDomainSocketAddress
 import java.nio.channels.{Channels, SocketChannel}
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -196,5 +197,20 @@ class DnstapSocketSourceSpec extends SparkSpec {
       val batchSizes = query.recentProgress.map(_.numInputRows).filter(_ > 0)
       assert(batchSizes.nonEmpty && batchSizes.forall(_ <= 2))
     } finally query.stop()
+  }
+
+  test("non-positive maxFramesPerTrigger or maxFrameBytes is rejected " +
+    "before the socket binds") {
+    val sock = Files.createTempDirectory("graft-sock").resolve("d.sock").toString
+    for (key <- Seq("maxFramesPerTrigger", "maxFrameBytes"); v <- Seq("0", "-1")) {
+      val opts = new CaseInsensitiveStringMap(
+        java.util.Map.of("path", sock, key, v))
+      val e = intercept[IllegalArgumentException] {
+        // a stream that does get built must not keep the socket bound
+        new DnstapSocketScan(opts).toMicroBatchStream("unused").stop()
+      }
+      assert(e.getMessage.contains(s"'$key'"), e.getMessage)
+      assert(!Files.exists(Paths.get(sock)), s"$key=$v bound the socket")
+    }
   }
 }
