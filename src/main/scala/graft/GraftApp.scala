@@ -113,17 +113,14 @@ object GraftApp {
     // reference's log-and-lose — while response/sample batches stay
     // all-or-nothing (undecorated sinks abort on error)
     import org.apache.spark.sql.functions.col
-    val querySink = new graft.sinks.RowSkippingSink(
-      sink(cfg.queryTable, cfg.queryProjection),
-      valid = col("queryTime").isNotNull && col("identity").isNotNull,
-      deadLetter = Some(new ParquetAppendSink(
-        s"$outputDir/_dead_letter/${cfg.queryTable}")))
-
     DnstapPipeline.start(spark, frames, cfg.pipelineConfig,
-      DnstapPipeline.Sinks(
-        queries = querySink,
+      DnstapPipeline.Sinks.referencePolicy(
+        queries = sink(cfg.queryTable, cfg.queryProjection),
         responses = sink(cfg.responseTable, cfg.responseProjection),
-        samples = sink(cfg.queryResponseTimeTable, cfg.sampleProjection)),
+        samples = sink(cfg.queryResponseTimeTable, cfg.sampleProjection),
+        queryRowValid = col("queryTime").isNotNull && col("identity").isNotNull,
+        deadLetter = Some(new ParquetAppendSink(
+          s"$outputDir/_dead_letter/${cfg.queryTable}"))),
       checkpointRoot = checkpointDir,
       instantTriggers = instantTriggers)
   }

@@ -228,9 +228,8 @@ private[graft] trait Queries11Formats extends Queries10Information {
   // ---------------------------------------------------------------------
   // the base labeling AND the base shingle index are the STORED
   // artifacts an incremental round extends — production computed both
-  // when the base corpus was admitted (Dedup.shingleIndex is documented
-  // as exactly this persistable frame; StreamCluster appends one
-  // generation of it per micro-batch). Memoized per (JVM, sf dir) like
+  // when the base corpus was admitted (Dedup.shingleIndex is exactly
+  // this fixed-width frame). Memoized per (JVM, sf dir) like
   // the q253 pairs artifact: the bench warm pass pays the one-time
   // build, the timed runs measure the actual incremental work (delta
   // index + probe + delta pairs + reduced-graph fixpoint). r20: the

@@ -310,9 +310,7 @@ private[graft] trait Queries8Analytics extends Queries7Pipelines {
   // q199 — per-source weighted sample via the NATIVE mergeable k-ledger
   // aggregate (functions/TopKPriorityAgg through operators/Sampling
   // .groupedPrioritySample): the same draw as q194 but ONE aggregation
-  // with O(k) state per group instead of a per-group sort window — the
-  // form that also runs under Structured Streaming
-  // (streaming/StreamPrioritySample, batch-equivalence pinned).
+  // with O(k) state per group instead of a per-group sort window.
   // ---------------------------------------------------------------------
   private[graft] def q199GroupedSample(spark: SparkSession, dir: String): DataFrame =
     Sampling.groupedPrioritySample(Tables.documents(spark, dir),

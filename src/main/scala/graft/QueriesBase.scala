@@ -87,7 +87,7 @@ private[graft] trait QueriesBase {
       parent.mkdirs()
       // sweep stale keys of THIS source dir only (old data fingerprints
       // / old versions); the build below replaces them. Two classes get
-      // grace, mirroring StreamCluster's compaction discipline:
+      // grace:
       //   - dot-prefixed entries are ANOTHER BUILDER'S in-flight staging
       //     dirs — deleting one mid-write tears a concurrent build
       //     (worst case: after its job commit wrote _SUCCESS but before

@@ -38,10 +38,13 @@ object Toml {
 
   private def stripComment(line: String): String = {
     var inStr = false
+    var escaped = false
     val b = new StringBuilder
     for (c <- line) {
-      if (c == '"') inStr = !inStr
-      if (c == '#' && !inStr) return b.toString
+      if (escaped) escaped = false
+      else if (inStr && c == '\\') escaped = true
+      else if (c == '"') inStr = !inStr
+      else if (c == '#' && !inStr) return b.toString
       b += c
     }
     b.toString
@@ -49,11 +52,49 @@ object Toml {
 
   private def parseValue(v: String, ctx: String): Value = v match {
     case s if s.startsWith("\"") && s.endsWith("\"") && s.length >= 2 =>
-      Str(s.substring(1, s.length - 1))
+      Str(basicString(s.substring(1, s.length - 1), ctx))
     case "true"  => Bool(true)
     case "false" => Bool(false)
     case s if s.matches("-?[0-9]+") => Num(s.toLong)
     case _ => throw new IllegalArgumentException(s"bad TOML value: $ctx")
+  }
+
+  /** Decode the body of a TOML basic string: the escapes
+    * `\b \t \n \f \r \" \\ \uXXXX \UXXXXXXXX`. Any other escape, an
+    * unescaped quote, or a trailing lone backslash is a bad value. */
+  private def basicString(body: String, ctx: String): String = {
+    def bad = new IllegalArgumentException(s"bad TOML value: $ctx")
+    val b = new StringBuilder
+    var i = 0
+    while (i < body.length) {
+      body(i) match {
+        case '"' => throw bad
+        case '\\' if i + 1 < body.length =>
+          body(i + 1) match {
+            case 'b' => b += '\b'
+            case 't' => b += '\t'
+            case 'n' => b += '\n'
+            case 'f' => b += '\f'
+            case 'r' => b += '\r'
+            case '"' => b += '"'
+            case '\\' => b += '\\'
+            case u @ ('u' | 'U') =>
+              val digits = if (u == 'u') 4 else 8
+              val hex = body.slice(i + 2, i + 2 + digits)
+              if (!hex.matches(s"[0-9a-fA-F]{$digits}")) throw bad
+              val cp = java.lang.Long.parseLong(hex, 16)
+              if (cp > Character.MAX_CODE_POINT || (cp >= 0xD800 && cp <= 0xDFFF))
+                throw bad
+              b.appendAll(Character.toChars(cp.toInt))
+              i += digits
+            case _ => throw bad
+          }
+          i += 2
+        case '\\' => throw bad
+        case c => b += c; i += 1
+      }
+    }
+    b.toString
   }
 
   /** "20s" / "500ms" / "5m" / "1h" → seconds (ms rounds down). */
@@ -110,10 +151,10 @@ final case class GraftConfig(
     questionTypeColumn: String,
     counterColumn: String,
     // [Spark] — engine-side extension section (no reference analog):
-    // streaming state-store provider class. RocksDB by default so
-    // watermark state (LatencyMatcher, StreamDedup, EventWindows) lives
-    // off-heap and restores incrementally — at 100 TB watermark widths
-    // the default HDFS-backed in-memory map is heap-bounded.
+    // streaming state-store provider class. RocksDB by default so the
+    // W2 LatencyMatcher's pending-match state lives off-heap and
+    // restores incrementally — at 100 TB the default HDFS-backed
+    // in-memory map is heap-bounded.
     stateStoreProvider: String = GraftConfig.RocksDbProvider,
     // RocksDB changelog checkpointing: commit uploads the per-batch
     // CHANGELOG instead of re-snapshotting SST files — commit latency

@@ -21,14 +21,9 @@ import org.apache.spark.sql.types._
   * is a k-bounded buffer that partial aggregation combines map-side,
   * so per-group cost is O(rows·k) worst / O(rows) typical (the
   * full-ledger fast path rejects a below-threshold row on ONE
-  * comparison) with O(k) state — and under
-  * Structured Streaming the state store holds exactly the k-ledger per
-  * (window, group), which is what makes a continuously-maintained
-  * weighted sample possible at all (a window function cannot run on a
-  * stream). Partials merge by ledger merge-sort + cap, an associative
-  * commutative law, so per-window streaming emissions re-aggregate to
-  * exactly the all-time answer ([[graft.streaming.StreamPrioritySample]]
-  * pins it).
+  * comparison) with O(k) state. Partials merge by ledger merge-sort +
+  * cap, an associative commutative law, so the merged ledger is
+  * exactly the single-pass answer whatever the partitioning.
   *
   * Determinism: priority is expected to be the deterministic w/u draw
   * (one IEEE double division — see prioritySample's exactness note);

@@ -353,8 +353,8 @@ object CorpusStats {
     *     (vocabulary-bounded, Zipf: orders of magnitude smaller than
     *     the token stream); the corpus itself is scanned exactly once;
     *   - the full pair count aggregates ONCE at start and collects
-    *     under a loud [[MaxBpePairLedger]] bound (the StreamScrub
-    *     require-before-collect convention) into a TreeSet-backed
+    *     under a loud [[MaxBpePairLedger]] bound (require before
+    *     collect) into a TreeSet-backed
     *     ledger ordered by (count DESC, pair UTF-8-byte ASC) — the
     *     per-round argmax is an O(1) first() with NO Spark job, and
     *     the ordering matches what a distributed ORDER BY n DESC, a, b
@@ -608,9 +608,8 @@ object CorpusStats {
         filter(split(col("__w"), ""), s => s =!= "").as("sym"))
       .localCheckpoint(false)
     // the full pair count aggregates ONCE and moves to a driver-side
-    // ledger: count() guards the bound BEFORE collect (the StreamScrub
-    // convention), and the checkpoint makes guard + collect share one
-    // execution
+    // ledger: count() guards the bound BEFORE collect, and the
+    // checkpoint makes guard + collect share one execution
     val init = words
       .select(col("wc"), explode(adjacentPairs(col("sym"))).as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))

@@ -491,25 +491,12 @@ object Dedup {
         coalesce(col("component"), col("id")).as("component"))
   }
 
-  /** Version tag of the shingle-hash identity [[shingleIndex]] writes —
-    * bumped whenever the hash function changes (r19 moved it from
-    * xxhash64 over the built shingle STRING to one xxhash64 over the n
-    * per-token xxhash64s). Persisted indexes carry this stamp
-    * (`_meta/hash_scheme`) and [[graft.streaming.StreamCluster]]
-    * validates it before probing: hashes from different schemes never
-    * match, so an unversioned upgrade would silently report "no
-    * duplicates" instead of failing (r19 ADVICE). */
-  val ShingleHashScheme: String = "token-xxh64-combine-v2"
-
-  /** Per-document shingle index as a PERSISTABLE frame: (doc, h, sz) —
-    * fixed-width rows (never shingle text), the artifact a continuously
-    * maintained dedup pipeline stores so new batches can probe the
-    * corpus without re-tokenizing it ([[graft.streaming.StreamCluster]]
-    * appends one generation of these per micro-batch). `sz` is the
-    * doc's distinct-shingle count, carried per row so the exact
-    * size-ratio prune runs inside the candidate join. The hash identity
-    * is versioned by [[ShingleHashScheme]]: an index persisted under a
-    * different scheme must be rebuilt, never probed. */
+  /** Per-document shingle index: (doc, h, sz) — fixed-width rows
+    * (never shingle text) that a later batch can probe without
+    * re-tokenizing the corpus (q256 writes one for its base corpus once
+    * and builds one per delta). `sz` is the doc's distinct-shingle
+    * count, carried per row so the exact size-ratio prune runs inside
+    * the candidate join. */
   def shingleIndex(df: DataFrame, idCol: String, textCol: String,
                    n: Int = 3): DataFrame = {
     // materialized once: the size aggregation AND the size-attach join
@@ -534,10 +521,9 @@ object Dedup {
     * (doc, h, sz) frames: the corpus is probed, never re-tokenized and
     * never self-joined. No df cap here by design: caps are
     * population-dependent, and this entry exists for the incremental ==
-    * full-closure equality (q256's contract). BOTH indexes must carry
-    * the same [[ShingleHashScheme]] — cross-scheme hashes never match,
-    * so the join would silently return no pairs; persisted-index
-    * callers (StreamCluster) validate the stamp before probing. */
+    * full-closure equality (q256's contract). Both indexes must come
+    * from [[shingleIndex]] in the same build: its hash identity is the
+    * only join key. */
   def jaccardPairsAgainstIndex(corpusIdx: DataFrame, batchIdx: DataFrame,
                                threshold: Double): DataFrame =
     batchIdx.as("b")
@@ -629,62 +615,6 @@ object Dedup {
     labels.join(superOf, Seq("component"), "left")
       .select(col("id"),
         coalesce(col("__sup"), col("component")).as("component"))
-  }
-
-  /** [[incrementalComponents]]' DELTA view: only the rows that change —
-    * the new batch's ids with their final labels (`is_new = true`) plus
-    * the base rows whose component was contracted to a smaller label
-    * (`is_new = false`) — computed WITHOUT materializing the full
-    * labeling. Every join here keeps the corpus side shuffle-free: the
-    * batch/edge/contraction sides are delta-sized (AQE broadcasts
-    * them), so the base labeling is only ever SCANNED. This is the
-    * generic (labeling-as-DataFrame) shape; the continuously maintained
-    * artifact re-expresses the same algebra with BUCKET-PRUNED artifact
-    * reads so not even a scan of the corpus labeling happens per batch
-    * ([[graft.streaming.StreamCluster.incrementalDeltaPruned]] — r17;
-    * writing deltas is pointless if computing them costs a corpus-sized
-    * read per batch). Same label algebra and disjoint-admission
-    * contract as [[incrementalComponents]]; applying the delta
-    * newest-wins over the base reconstructs its exact output
-    * (StreamClusterSpec's closure certificate pins it batch over
-    * batch). */
-  def incrementalComponentsDelta(baseLabels: DataFrame, deltaIds: DataFrame,
-                                 newEdges: DataFrame): DataFrame = {
-    val labels = baseLabels.select(col("id"), col("component"))
-      .unionByName(deltaIds.select(col("id"), col("id").as("component")))
-    // label-mapped edges: edge endpoints are delta-bounded, so both
-    // joins broadcast the edge side and stream the labeling
-    val el = newEdges.select(col("src"), col("dst"))
-      .join(labels.select(col("id").as("src"), col("component").as("__ls")),
-        Seq("src"))
-      .join(labels.select(col("id").as("dst"), col("component").as("__ld")),
-        Seq("dst"))
-      .select(col("__ls").as("src"), col("__ld").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .localCheckpoint() // delta-sized; feeds touched + the fixpoint
-    // edge-free fast path — the COMMON trickle-batch case in a
-    // mostly-unique corpus: no label-crossing edge means no contraction
-    // and no changed base row, so the delta is exactly the new ids as
-    // singletons and the fixpoint's job chain never runs
-    if (el.isEmpty)
-      return deltaIds.select(col("id"), col("id").as("component"),
-        lit(true).as("is_new"))
-    val touched = el.select(col("src").as("id"))
-      .union(el.select(col("dst").as("id"))).distinct()
-    val superOf = connectedComponents(touched, el)
-      .select(col("id").as("__old"), col("component").as("__sup"))
-      .localCheckpoint() // delta-sized; feeds both delta branches
-    val changedBase = baseLabels
-      .join(superOf.filter(col("__sup") =!= col("__old"))
-        .withColumnRenamed("__old", "component"), Seq("component"))
-      .select(col("id"), col("__sup").as("component"),
-        lit(false).as("is_new"))
-    val newRows = deltaIds
-      .join(superOf.withColumnRenamed("__old", "id"), Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("__sup"), col("id")).as("component"),
-        lit(true).as("is_new"))
-    newRows.unionByName(changedBase)
   }
 
   /** 64-bit SimHash over distinct whitespace tokens: bit j of the

@@ -39,9 +39,8 @@ object HeavyHitters {
     * extra group columns (per-source partial sketches). Output:
     * (groupCols..., depth, bucket, n) — exact integers, additive. */
   /** The d cells one item occurrence increments, as an array of
-    * (depth, bucket) structs — shared by the batch grid builder and
-    * the streaming windowed grids ([[graft.streaming.StreamSketch]])
-    * so the hash layout cannot drift between them. */
+    * (depth, bucket) structs — the one hash layout every grid and
+    * probe in this object uses. */
   def cellStructs(itemHash: Column, depth: Int, width: Int): Column =
     // takes the PRE-HASHED item (callers project xxhash64(item) into a
     // real column first — the shinglesOfTokens materialization
@@ -53,8 +52,9 @@ object HeavyHitters {
     // higher-order function: the whole cell build stays inside
     // WholeStageCodegen. CMS correctness is hash-agnostic (any
     // pairwise-independent-ish family never underestimates, which is
-    // all the exact verify rests on), and batch + streaming share this
-    // one function so the layout cannot drift between them.
+    // all the exact verify rests on), and the grid build and the
+    // candidate probe share this one function so the layout cannot
+    // drift between them.
     array((0 until depth).map(i => struct(
       lit(i).as("depth"),
       pmod(xxhash64(lit(i), itemHash), lit(width.toLong)).as("bucket")

@@ -115,8 +115,7 @@ object Retrieval {
     // either path): writing parts.doclen/parts.stats directly re-ran the
     // whole tokenize+explode lineage once per artifact (three corpus
     // passes per part, r19 measured), while this reads back the tiny
-    // written file (guide §1.2). Also removes the read-your-sources
-    // hazard the StreamIndex compaction had to order around.
+    // written file (guide §1.2).
     val spark = parts.postings.sparkSession
     val dl = spark.read.parquet(s"$path/postings")
       .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))

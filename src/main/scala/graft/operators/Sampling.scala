@@ -467,9 +467,8 @@ object Sampling {
     Dedup.baseHash60(concat(id.cast("string"), lit(salt)))
 
   /** THE priority draw of [[prioritySample]] — shared by the grouped
-    * aggregate form and the streaming leg so all three select the same
-    * sample: one IEEE double division of the weight by the
-    * deterministic 60-bit uniform. */
+    * aggregate form so both select the same sample: one IEEE double
+    * division of the weight by the deterministic 60-bit uniform. */
   private[graft] def priorityDraw(id: Column, w: Column): Column =
     w.cast("double") / (purposeHash60(id, ":pri") + lit(1L)).cast("double")
 
@@ -477,18 +476,15 @@ object Sampling {
     * aggregate ([[graft.functions.TopKPriorityAgg]]) — same draw as
     * [[prioritySample]], but ONE aggregation instead of a per-group
     * sort window: map-side partials keep ≤ k entries each, so a
-    * billion-row group costs its scan plus k-ledger merges, and the
-    * identical expression runs under Structured Streaming
-    * ([[graft.streaming.StreamPrioritySample]]).
+    * billion-row group costs its scan plus k-ledger merges.
     * Output: (groupCol, doc_id, w, rank). */
   def groupedPrioritySample(df: DataFrame, idCol: String,
                             weightCol: String, groupCol: String,
                             k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // the draw uses the LONG-CAST weight — the same value the ledger
-    // stores and StreamPrioritySample.mergeSamples re-derives the
-    // priority from; drawing from a fractional raw weight would make
-    // the merged sample provably differ near the k boundary
+    // stores; drawing from a fractional raw weight would make a
+    // priority re-derived from the ledger differ near the k boundary
     df.groupBy(col(groupCol))
       .agg(graft.functions.TopKPriorityFunctions.topk_priority_agg(
         col(idCol).cast("long"), col(weightCol).cast("long"),

@@ -61,9 +61,9 @@ object MergeInto {
 
   /** Merge `upserts` (full rows, same schema as the table, UNIQUE per
     * key — duplicate-key upserts land as duplicate rows; CDC callers
-    * collapse to latest-per-key first, as `streaming.StreamMerge`
-    * does) and `deleteKeys` (single key column) into the table at
-    * `path`. Rewrites ONLY the partitions containing changed keys. */
+    * collapse to latest-per-key first) and `deleteKeys` (single key
+    * column) into the table at `path`. Rewrites ONLY the partitions
+    * containing changed keys. */
   def mergeInto(spark: SparkSession, path: String, keyCol: String,
                 nParts: Int, upserts: DataFrame,
                 deleteKeys: DataFrame): Unit = {

@@ -33,20 +33,12 @@ object StatsReporter {
     // the number an operator watches to see watermark state leak
     val stateRows = new AtomicLong
     val stateBytes = new AtomicLong
-    // media decode-audit ledger, fed per micro-batch by
-    // [[StreamMediaAudit.withLedger]]: total payloads seen and payloads
-    // no parser accepted — corrupt rows drop from the pipeline, so this
-    // line is the ONLY place they remain visible (the MediaCodec.audit
-    // never-silently-vanish rule, carried into streaming)
-    val mediaDocs = new AtomicLong
-    val mediaCorrupt = new AtomicLong
   }
 
   /** One report line; factored out so the format is unit-testable. */
   def line(c: Counters, nextIntervalSecs: Long): String =
     s"graft stats: batches=${c.batches.get} inputRows=${c.inputRows.get} " +
       s"stateRows=${c.stateRows.get} stateBytes=${c.stateBytes.get} " +
-      s"mediaDocs=${c.mediaDocs.get} mediaCorrupt=${c.mediaCorrupt.get} " +
       s"nextIntervalSecs=$nextIntervalSecs"
 
   /** Attach a stats thread + listener for the given query names; returns

@@ -120,6 +120,23 @@ class GraftConfigSpec extends AnyFunSuite {
       "[Dnstap]\nReaders = \"many\""))
   }
 
+  test("basic strings decode TOML escapes; a quoted # is not a comment") {
+    val c = GraftConfig.fromToml("[ClickHouse]\n" +
+      "Password = \"p\\\"#x\"  # the comment starts here\n" +
+      "Username = \"dom\\\\user\"\n" +
+      "Database = \"t\\tb\\u00e9\\U0001F600\\n\"\n")
+    assert(c.password == "p\"#x")
+    assert(c.username == "dom\\user")
+    assert(c.database == "t\tb\u00e9\uD83D\uDE00\n")
+    assert(c.jdbcAuthOptions == Map("user" -> "dom\\user", "password" -> "p\"#x"))
+    // an unknown escape, a short unicode escape, a surrogate code point,
+    // an escaped closing quote and a bare quote in the body are rejected
+    for (v <- Seq("\"a\\qb\"", "\"\\u12\"", "\"\\uD800\"", "\"ab\\\"",
+                  "\"a\"b\""))
+      intercept[IllegalArgumentException](
+        GraftConfig.fromToml(s"[ClickHouse]\nPassword = $v"))
+  }
+
   test("socket options feed the graft-dnstap source") {
     val c = GraftConfig.fromToml(
       "[Dnstap]\nUnixSocket = \"/tmp/d.sock\"\nReaders = 4\nReadTimeout = \"20s\"")

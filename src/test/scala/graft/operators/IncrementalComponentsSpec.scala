@@ -70,37 +70,4 @@ class IncrementalComponentsSpec extends SparkSpec {
       assert(got === expect, s"trial $trial: edges=$edges")
     }
   }
-
-  test("the delta view applied newest-wins over the base reconstructs " +
-    "incrementalComponents exactly, and marks arrivals") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(0xde17aL)
-    (0 until 8).foreach { trial =>
-      val n = 24
-      val nodes = (0L until n.toLong)
-      val edges = (0 until rnd.nextInt(30)).map(_ =>
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(e => e._1 != e._2).distinct
-      val delta = nodes.filter(_ % 4 == 0)
-      val base = nodes.filterNot(delta.contains)
-      val dset = delta.toSet
-      val baseEdges = edges.filter(e => !dset(e._1) && !dset(e._2))
-      val newEdges = edges.filter(e => dset(e._1) || dset(e._2))
-      val baseLabels = Dedup.connectedComponents(
-        base.toDF("id"), baseEdges.toDF("src", "dst")).localCheckpoint()
-      val d = Dedup.incrementalComponentsDelta(baseLabels,
-          delta.toDF("id"), newEdges.toDF("src", "dst"))
-        .collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
-      // arrivals are exactly the delta ids; changed rows only base ids
-      assert(d.filter(_._2._2).keySet === dset,
-        s"trial $trial: is_new rows diverge from the delta ids")
-      // newest-wins application over the base == the full incremental
-      val applied = baseLabels.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap ++
-        d.view.mapValues(_._1).toMap
-      val expect = incr(base, baseEdges, delta, newEdges)
-      assert(applied === expect, s"trial $trial: edges=$edges")
-    }
-  }
 }

@@ -12,35 +12,35 @@ class StatsReporterSpec extends AnyFunSuite {
     assert(seq.sliding(2).forall(p => p(1) >= p(0))) // monotone
   }
 
-  test("report line carries the state-store gauges and the media ledger") {
+  test("report line carries the state-store gauges") {
     val c = new StatsReporter.Counters
     c.batches.set(3); c.inputRows.set(42)
     c.stateRows.set(7); c.stateBytes.set(4096)
-    c.mediaDocs.set(120); c.mediaCorrupt.set(4)
     assert(StatsReporter.line(c, 15) ==
       "graft stats: batches=3 inputRows=42 stateRows=7 stateBytes=4096 " +
-        "mediaDocs=120 mediaCorrupt=4 nextIntervalSecs=15")
+        "nextIntervalSecs=15")
   }
 }
 
 class StatsReporterStateSpec extends graft.SparkSpec {
-  private def t(min: Int) = new java.sql.Timestamp(3600_000L + min * 60_000L)
-
   test("listener surfaces state rows/bytes from a stateful query's progress") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val handle = StatsReporter.attach(spark, Set("stats_state_q"),
       StatsReporter.Schedule(initialSecs = 1), log = lines.add(_))
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Seen]
-    val out = StreamDedup.withinWatermark(mem.toDF(), Seq("key"), "ts", "10 minutes")
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[LatencyMatcher.MatchEvent]
+    val out = LatencyMatcher.samples(spark, mem.toDS(), ttlMs = 600000L)
     val query = out.writeStream.format("memory").queryName("stats_state_q")
       .outputMode("append").start()
     try {
-      mem.addData(Seen(t(0), "a", 1), Seen(t(1), "b", 2), Seen(t(2), "c", 3))
-      query.processAllAvailable()
-      // the dedup operator now holds 3 keys of state; wait for a tick
-      val deadline = System.nanoTime() + 15_000_000_000L
+      mem.addData((1 to 3).map(i => LatencyMatcher.MatchEvent(
+        "ns1", "10.0.0.1", 1000 + i, i, 1000000L * i, isResponse = false)): _*)
+      // 3 unanswered queries hold matcher state once the batch runs; wait
+      // for a tick (no processAllAvailable: the matcher's processing-time
+      // timeout keeps no-data batches running, so it never returns)
+      val deadline = System.nanoTime() + 60_000_000_000L
       var seen = Option.empty[String]
       while (seen.isEmpty && System.nanoTime() < deadline) {
         Thread.sleep(200)

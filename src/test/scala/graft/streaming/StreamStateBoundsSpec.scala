@@ -10,8 +10,8 @@ import graft.SparkSpec
 
 /** MEASURED state bounds (r14, VERDICT item 4): the streaming legs
   * document their state-store footprint ("one pending row per
-  * unmatched key", "one open session per active key", "one bucket row
-  * per touched band value — never per document"); these tests read
+  * unmatched key", "one open session per active key", "one chain head
+  * per user"); these tests read
   * `StreamingQueryProgress.stateOperators.numRowsTotal` under
   * multi-batch feeds and assert the documented bound as a number, not
   * a design claim. */
@@ -101,107 +101,6 @@ class StreamStateBoundsSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("StreamScd2 state rows == keys, never versions (history length)") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[StreamScd2.ChangeIn]
-    val out = StreamScd2.intervals(mem.toDF(), "key", "ts", "attrs",
-      watermark = "10 seconds")
-    val query = out.writeStream.format("memory").queryName("sb_scd2")
-      .outputMode("append").start()
-    try {
-      // 200 versions over 4 keys, attrs changing — hundreds of closed
-      // intervals emit, but per key the state is ONE row (open run +
-      // in-horizon buffer live INSIDE it): 4 rows, not 200
-      mem.addData((0 until 200).map(i => StreamScd2.ChangeIn(
-        i % 4, t(10 + i), s"a${i % 3}")))
-      query.processAllAvailable()
-      awaitState(query)(_ == 4L)
-      // 200 MORE versions on the same keys: churn must not grow state
-      mem.addData((0 until 200).map(i => StreamScd2.ChangeIn(
-        i % 4, t(400 + i), s"b${i % 3}")))
-      query.processAllAvailable()
-      val maxSeen = awaitState(query)(_ == 4L)
-      assert(maxSeen <= 4L,
-        s"SCD2 state grew past the key count under version churn: $maxSeen")
-      assert(spark.sql("SELECT * FROM sb_scd2").count() >= 100L,
-        "the closed-interval stream stalled while state stayed bounded")
-    } finally query.stop()
-  }
-
-  test("StreamFunnel state rows == open (user, window) groups, purged " +
-    "when the watermark fires them") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, String)]
-    val out = StreamFunnel.windowed(
-      mem.toDF().selectExpr("_1 AS user", "CAST(_2 AS TIMESTAMP) AS ts",
-        "_3 AS etype"),
-      "user", "ts", "etype", steps = Seq("view", "click"),
-      windowSec = 100, watermark = "10 seconds")
-    val query = out.writeStream.format("memory").queryName("sb_funnel")
-      .outputMode("append").start()
-    try {
-      // 60 step events from 3 users, all inside window 0: state is 3
-      // buffered groups — per (user, window), never per event
-      mem.addData((0 until 60).map(i =>
-        (i % 3L, i.toLong, if (i % 2 == 0) "view" else "click")))
-      query.processAllAvailable()
-      val maxSeen = awaitState(query)(_ == 3L)
-      assert(maxSeen <= 3L,
-        s"funnel state exceeded the open-group bound: $maxSeen")
-      // watermark far past the window end: the 3 groups fire (one exact
-      // funnel row each) and PURGE; only the watermark-driver events'
-      // own fresh groups may remain
-      mem.addData((99L, 100000L, "view"))
-      query.processAllAvailable()
-      mem.addData((98L, 200000L, "view"))
-      query.processAllAvailable()
-      awaitState(query)(_ <= 2L)
-      val fired = spark.sql(
-        "SELECT * FROM sb_funnel WHERE user_id < 3").count()
-      assert(fired == 3L, s"expected 3 fired funnel rows, got $fired")
-    } finally query.stop()
-  }
-
-  test("StreamAttribution state rows == users with a live touch, " +
-    "expired once the watermark passes the lookback horizon") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, String, Double, Long)]
-    val out = StreamAttribution.lastTouch(
-      mem.toDF().selectExpr("_1 AS user", "_2 AS id", "_3 AS etype",
-        "_4 AS value", "CAST(_5 AS TIMESTAMP) AS ts"),
-      "user", "ts", "id", "value", "etype",
-      convType = "purchase", touchTypes = Seq("ad"),
-      lookbackUs = 60L * 1000000L, watermark = "10 seconds")
-    val query = out.writeStream.format("memory").queryName("sb_attr")
-      .outputMode("append").start()
-    try {
-      // 100 touches over 10 users: ONE max-(ts,id) triple per user
-      mem.addData((0 until 100).map(i =>
-        (i % 10L, i.toLong, "ad", 0.0, 10L + i)))
-      query.processAllAvailable()
-      val maxSeen = awaitState(query)(_ == 10L)
-      assert(maxSeen <= 10L,
-        s"attribution state exceeded the active-user bound: $maxSeen")
-      // 10 conversions inside the lookback: credits emit, state stays 10
-      mem.addData((0 until 10).map(i =>
-        (i.toLong, 1000L + i, "purchase", 5.0, 115L)))
-      query.processAllAvailable()
-      awaitState(query)(_ == 10L)
-      assert(spark.sql(
-        "SELECT * FROM sb_attr WHERE channel = 'ad'").count() == 10L)
-      // watermark far past every touch's lookback horizon: expired
-      // state drops; the driver conversion itself stores no touch
-      mem.addData((999L, 9999L, "purchase", 1.0, 100000L))
-      query.processAllAvailable()
-      mem.addData((998L, 9998L, "purchase", 1.0, 200000L))
-      query.processAllAvailable()
-      awaitState(query)(_ == 0L)
-    } finally query.stop()
-  }
-
   test("StreamTransitions state rows == distinct users (the documented " +
     "per-user chain-head floor), flat under event churn") {
     import spark.implicits._
@@ -229,45 +128,6 @@ class StreamStateBoundsSpec extends SparkSpec {
       // 40 events per user per wave: 39 pairs each in wave 1, 40 in
       // wave 2 (the chain head survives across batches)
       assert(spark.sql("SELECT * FROM sb_trans").count() === 395L)
-    } finally query.stop()
-  }
-
-  // StreamIndex is NOT listed here by design: it keeps no state store
-  // (foreachBatch writes additive delta directories; the bounded
-  // quantity is the directory count, which StreamIndexSpec measures
-  // around compactDeltas).
-
-  test("StreamMediaDedup state rows == touched buckets, never per doc") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Timestamp)]
-    val out = StreamMediaDedup.hammingPairs63(
-      mem.toDF().toDF("doc_id", "fp", "ts"),
-      "doc_id", "fp", "ts", watermark = "10 seconds", maxHamming = 2,
-      bucketCap = 8)
-    val query = out.writeStream.format("memory").queryName("sb_media")
-      .outputMode("append").start()
-    try {
-      // 50 docs with the SAME fingerprint: 3 band buckets total — the
-      // cap bounds per-bucket entries (8) + ghosts (32); state ROWS stay
-      // 3 regardless of doc count
-      val fp = 0x123456789ABL
-      mem.addData((1L to 50L).map(i => (i, fp, t(20 + i))))
-      query.processAllAvailable()
-      val maxSeen = awaitState(query)(_ == 3L)
-      assert(maxSeen <= 3L, s"bucket state exceeded 3 band rows: $maxSeen")
-      // watermark far past the horizon: the 3 old buckets expire; the
-      // closer doc's own fingerprint occupies exactly 3 fresh buckets
-      mem.addData((999L, 0x7F0F0F0F0F0F0FL, t(100000)))
-      query.processAllAvailable()
-      mem.addData((998L, 0x70AA55AA55AA55L, t(200000))) // no band shared
-      query.processAllAvailable()
-      awaitState(query)(_ <= 6L)
-      // first 8 docs pair fully (8 choose 2 = 28); overflow docs emitted
-      // pairs against the 8 stored before ghosting: exactly cap pairs
-      val pairs = spark.sql("SELECT * FROM sb_media").count()
-      assert(pairs == 28L + 42L * 8L,
-        s"pair emission under cap overflow drifted: $pairs")
     } finally query.stop()
   }
 }
