@@ -166,24 +166,59 @@ private[graft] trait QueriesBase {
   * each leg leaves most cores idle, and on a cluster the tail of one
   * leg's last stage would idle executors the next leg could back-fill.
   * `eval` runs the thunks on a small fixed pool so their jobs
-  * interleave; results return in input order. */
+  * interleave; results return in input order.
+  *
+  * The pool's threads are created by the calling thread, so each leg
+  * inherits its Spark local properties: the job group a streaming
+  * query's stop cancels, and `streaming.sql.batchId`. The legs' jobs
+  * also carry a job tag of this call. The first leg to fail, in
+  * completion order, stops the others: their jobs are cancelled by that
+  * tag and their threads interrupted. `eval` then waits until every leg
+  * has ended and rethrows that first failure, so no leg outlives the
+  * call. An interrupt of the calling thread stops the legs the same way
+  * and is rethrown as the failure. */
 private[graft] object Par {
   def eval[A](thunks: Seq[() => A], parallelism: Int = 4): Seq[A] =
     if (thunks.sizeIs <= 1) thunks.map(_())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, thunks.size))
-      try
-        thunks.map(th => pool.submit(new java.util.concurrent.Callable[A] {
-          def call(): A = th()
-        })).map { f =>
-          try f.get()
+      import java.util.concurrent._
+      val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .map(_.sparkContext)
+      val tag = s"graft-par-${java.util.UUID.randomUUID()}"
+      def cancelJobs(): Unit = sc.foreach(_.cancelJobsWithTag(tag))
+      val pool = Executors.newFixedThreadPool(math.min(parallelism, thunks.size))
+      val done = new ExecutorCompletionService[A](pool)
+      val legs = thunks.map { th =>
+        done.submit { () =>
+          sc.foreach(_.addJobTag(tag))
+          try th() finally sc.foreach(_.removeJobTag(tag))
+        }
+      }
+      var failure: Throwable = null
+      try {
+        var left = legs.size
+        while (left > 0 && failure == null) {
+          left -= 1
+          try done.take().get()
           catch { // surface the leg's own failure, not the wrapper
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
+            case e: ExecutionException => failure = Option(e.getCause).getOrElse(e)
           }
         }
-      finally { pool.shutdown(); () }
+      } catch { case e: InterruptedException => failure = e }
+      if (failure != null) { cancelJobs(); pool.shutdownNow(); () }
+      else pool.shutdown()
+      // wait for every leg, even when interrupted meanwhile
+      var interrupted = false
+      var ended = false
+      while (!ended)
+        try ended = pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+      if (failure != null) {
+        cancelJobs() // a job a leg submitted between the cancel and its interrupt
+        throw failure
+      }
+      legs.map(_.get())
     }
 }
 

@@ -5,14 +5,16 @@ import org.apache.spark.sql.functions.col
 
 /** Small-files maintenance for the batch-partitioned parquet sink.
   *
-  * [[ParquetAppendSink]] buys replay idempotence with one `__batch_id`
-  * partition per micro-batch — which at a 20 s cadence is 4 320
-  * directories a day per table. Each holds up to `defaultParallelism`
-  * small files: the row-skipping query sink coalesces its cached batch
-  * to that many partitions, and AQE sizes the uncached writes. That is
-  * the classic streaming small-files problem, and at 100 TB the thing
-  * that actually kills scan performance (footer-per-file costs, driver
-  * listing time).
+  * [[ParquetAppendSink]] buys replay idempotence with one
+  * `__batch_id=<id>` directory per micro-batch, written by a plain
+  * overwrite of that directory (no dynamic partition overwrite, no
+  * staging rename) — which at a 20 s cadence is 4 320 directories a day
+  * per table. Each holds a `_SUCCESS` marker and up to
+  * `defaultParallelism` small files: the row-skipping query sink
+  * coalesces its cached batch to that many partitions, and AQE sizes the
+  * uncached writes. That is the classic streaming small-files problem,
+  * and at 100 TB the thing that actually kills scan performance
+  * (footer-per-file costs, driver listing time).
   * Compaction is the standard maintenance move: periodically rewrite
   * CLOSED batches into few large files. Replay protection is only
   * needed for batches the running query could still retry, so dropping

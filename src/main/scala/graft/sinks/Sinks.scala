@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Micro-batch sinks (K1–K3, /root/reference/src/clickhouse/clickhouse.go).
   *
@@ -45,22 +45,21 @@ object ColumnProjection {
   val identity: ColumnProjection = ColumnProjection(Nil)
 }
 
-/** Parquet table sink, idempotent under micro-batch replay: rows land in
-  * a `__batch_id=<id>` partition and a replayed (df, batchId) OVERWRITES
-  * exactly its own partition (dynamic partition overwrite), so a batch
-  * retried after a partial append yields its rows once. The partition
-  * column doubles as delivery lineage; every other partition is untouched
-  * by a replay. A plain mode("append") here would double-write on every
-  * foreachBatch retry. */
+/** Parquet table sink, idempotent under micro-batch replay: each batch
+  * lands in its own `path/__batch_id=<id>` directory, written with a plain
+  * (static) overwrite of that directory, so a replayed (df, batchId)
+  * replaces exactly the rows of its earlier attempt and every other batch
+  * is untouched. Readers discover `__batch_id` as a partition column, which
+  * doubles as delivery lineage. Each batch directory holds its
+  * `part-*.parquet` files and a `_SUCCESS` marker; an empty batch leaves
+  * its directory too, with one row-less file that carries the schema. A
+  * plain mode("append") here would double-write on every foreachBatch
+  * retry. */
 final class ParquetAppendSink(path: String,
                               projection: ColumnProjection = ColumnProjection.identity)
     extends BatchSink {
   override def write(df: DataFrame, batchId: Long): Unit =
-    projection(df).withColumn("__batch_id", org.apache.spark.sql.functions.lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id")
-      .parquet(path)
+    projection(df).write.mode("overwrite").parquet(s"$path/__batch_id=$batchId")
 }
 
 /** JDBC batch writer (ClickHouse via clickhouse-jdbc, or any JDBC store).
@@ -106,7 +105,14 @@ final class CollectingSink(projection: ColumnProjection = ColumnProjection.ident
   * query-side policy declaratively: rows failing `valid` are diverted to
   * an optional dead-letter sink (an upgrade over the reference's
   * log-and-lose) and the remainder is delivered. Abort-on-error batches
-  * are simply the undecorated [[BatchSink]]. */
+  * are simply the undecorated [[BatchSink]].
+  *
+  * The batch is cached, so the upstream plan runs once; the inner write
+  * fills the cache, and whether any row failed `valid` is then decided by
+  * one single-stage count over it. That count is exact whatever the
+  * inner write did. Metrics observed under the cache are not: a task that
+  * fills its cached block and then fails drops its counts, and the retry
+  * reads the block without counting it again. */
 final class RowSkippingSink(inner: BatchSink,
                             valid: org.apache.spark.sql.Column,
                             deadLetter: Option[BatchSink] = None)
@@ -117,17 +123,23 @@ final class RowSkippingSink(inner: BatchSink,
       // null-safe split: a predicate evaluating to NULL (e.g. a length
       // test over a NULL column) matches neither filter(p) nor
       // filter(!p) — such rows must dead-letter, not silently vanish
-      val ok = valid.eqNullSafe(org.apache.spark.sql.functions.lit(true))
+      val ok = valid.eqNullSafe(lit(true))
       inner.write(persisted.filter(ok), batchId)
-      val bad = persisted.filter(!ok) // counted after the write fills the cache
-      deadLetter.foreach(dl => if (bad.count() > 0) dl.write(bad, batchId))
+      val bad = persisted.filter(!ok)
+      // counted after the write fills the cache; over the plan's rows
+      // rather than through Dataset.count, whose aggregate and shuffle
+      // would cost a second job
+      deadLetter.foreach(dl => if (bad.queryExecution.toRdd.count() > 0) dl.write(bad, batchId))
     } finally { persisted.unpersist(); () }
   }
 }
 
 /** Linear-backoff retry decorator (reference schedule: +`stepMs` per
   * failure up to `maxMs`, clickhouse.go:39-40,361-413) that surfaces the
-  * failure after `maxAttempts` instead of dropping data. */
+  * failure after `maxAttempts` instead of dropping data. An interrupt —
+  * a streaming query's stop, or a cancelled `Par` leg — is never
+  * retried: it is rethrown at once with the thread's interrupt flag
+  * set. */
 final class RetryingSink(inner: BatchSink, maxAttempts: Int = 5,
                          stepMs: Long = 10000, maxMs: Long = 300000,
                          sleep: Long => Unit = Thread.sleep)
@@ -136,13 +148,26 @@ final class RetryingSink(inner: BatchSink, maxAttempts: Int = 5,
     var attempt = 0
     var done = false
     while (!done) {
-      try { inner.write(df, batchId); done = true }
-      catch {
+      try {
+        if (attempt > 0) sleep(math.min(stepMs * attempt, maxMs))
+        inner.write(df, batchId); done = true
+      } catch {
+        case e: Exception if RetryingSink.isInterrupt(e) =>
+          Thread.currentThread().interrupt(); throw e
         case e: Exception =>
           attempt += 1
           if (attempt >= maxAttempts) throw e
-          sleep(math.min(stepMs * attempt, maxMs))
       }
     }
   }
+}
+object RetryingSink {
+  /** The failure is, or was caused by, an interrupt of this thread. */
+  private def isInterrupt(e: Throwable): Boolean =
+    Thread.currentThread().isInterrupted ||
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).exists {
+        case _: InterruptedException | _: java.io.InterruptedIOException |
+             _: java.nio.channels.ClosedByInterruptException => true
+        case _ => false
+      }
 }

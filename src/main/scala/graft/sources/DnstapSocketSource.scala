@@ -69,17 +69,20 @@ final class DnstapSocketScan(options: CaseInsensitiveStringMap) extends Scan {
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("graft-dnstap source requires option 'path'"))
-    val readers = math.min(
-      Option(options.get("readers")).map(_.toInt).getOrElse(1),
-      DnstapSocketSource.MaxReaders)
-    // a non-positive row limit never advances the offset, and a
-    // non-positive frame cap rejects every frame, handshake included
-    def positive[T: Numeric](key: String, parse: String => Option[T]): Option[T] =
+    def atLeast[T](key: String, parse: String => Option[T], min: T, what: String)
+                  (implicit n: Numeric[T]): Option[T] =
       Option(options.get(key)).map { str =>
-        parse(str).filter(Numeric[T].gt(_, Numeric[T].zero)).getOrElse(
+        parse(str).filter(n.gteq(_, min)).getOrElse(
           throw new IllegalArgumentException(
-            s"Invalid value '$str' for option '$key', must be a positive integer"))
+            s"Invalid value '$str' for option '$key', must be a $what integer"))
       }
+    // a non-positive row limit never advances the offset, a non-positive
+    // frame cap rejects every frame, handshake included, and fewer than
+    // one reader is a misconfiguration, not a request for one
+    def positive[T](key: String, parse: String => Option[T])(implicit n: Numeric[T]): Option[T] =
+      atLeast(key, parse, n.one, "positive")
+    val readers = math.min(positive("readers", _.toIntOption).getOrElse(1),
+      DnstapSocketSource.MaxReaders)
     val maxFrames = positive("maxFramesPerTrigger", _.toLongOption)
     val maxFrameBytes = positive("maxFrameBytes", _.toIntOption)
       .getOrElse(FrameStreams.DefaultMaxFrameBytes)
@@ -87,7 +90,7 @@ final class DnstapSocketScan(options: CaseInsensitiveStringMap) extends Scan {
     // a connection delivering no frame within the timeout is dropped,
     // freeing its pooled reader. 0 disables; GraftConfig supplies the
     // reference default (5 s) through socketOptions.
-    val readTimeoutSecs = Option(options.get("readTimeoutSecs")).map(_.toInt)
+    val readTimeoutSecs = atLeast("readTimeoutSecs", _.toIntOption, 0, "non-negative")
       .getOrElse(0)
     new DnstapSocketMicroBatchStream(path, readers, maxFrames, maxFrameBytes,
       readTimeoutSecs)

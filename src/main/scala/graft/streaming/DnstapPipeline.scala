@@ -19,7 +19,10 @@ import graft.sinks.BatchSink
   *   - W1 query (`Trigger.ProcessingTime(writeInterval)`, default 20 s):
   *     per-trigger grouping-set aggregation of client queries and non-OK
   *     client responses inside `foreachBatch` — per-batch aggregation IS
-  *     the reference's clear-on-flush semantics (aggregator.go:424,446);
+  *     the reference's clear-on-flush semantics (aggregator.go:424,446).
+  *     The query leg and the response leg run concurrently (`Par.eval`,
+  *     on threads that inherit the batch's job group and batch id); the
+  *     first leg to fail cancels the other and fails the batch;
   *   - W2 query (`writeInterval/2`): mask-sampled symmetric latency
   *     matcher (`flatMapGroupsWithState`, see LatencyMatcher) + per-
   *     identity average per trigger (A4), feeding the adaptive-sampler
@@ -98,13 +101,16 @@ object DnstapPipeline {
         .foreachBatch { (batch: Dataset[Array[Byte]], batchId: Long) =>
           // each branch decodes the raw frames straight to its rows: a
           // second protobuf+DNS-wire pass costs less than caching decoded
-          // frames through an encoder only to flatten them again
-          if (cfg.clientQueries) {
+          // frames through an encoder only to flatten them again. The two
+          // legs share nothing, so they write at once; a failed leg stops
+          // its sibling (Par.eval) and fails the batch.
+          val legs = Seq.newBuilder[() => Unit]
+          if (cfg.clientQueries) legs += { () =>
             val rows = batch.flatMap(b =>
               DnstapCodec.decode(b).toSeq.flatMap(DnstapRows.toQueryRows(_))).toDF()
             sinks.queries.write(aggregateQueries(rows, cfg), batchId)
           }
-          if (cfg.nonOkClientResponses) {
+          if (cfg.nonOkClientResponses) legs += { () =>
             // keepSuccess=false here is Fl4+Fl5: NOERROR rows never reach
             // the aggregation branch even when the sample branch keeps
             // them (that branch decodes its own stream below).
@@ -112,6 +118,8 @@ object DnstapPipeline {
               .flatMap(DnstapRows.toResponseRows(_, keepSuccess = false))).toDF()
             sinks.responses.write(aggregateResponses(rows, cfg), batchId)
           }
+          graft.Par.eval(legs.result())
+          ()
         }
         .start()
       queries += q

@@ -1,10 +1,49 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.SparkSpec
 
 class SinksSpec extends SparkSpec {
+
+  /** Tags each job `inner` submits with `tag`. */
+  private final class TaggingSink(tag: String, inner: BatchSink) extends BatchSink {
+    override def write(df: DataFrame, batchId: Long): Unit = {
+      spark.sparkContext.addJobTag(tag)
+      try inner.write(df, batchId) finally spark.sparkContext.removeJobTag(tag)
+    }
+  }
+
+  /** The job tags of every job `body` submits from this thread. A marker
+    * job run after `body` shows that the listener has seen them all. */
+  private def jobTagsOf(body: => Unit): Seq[Set[String]] = {
+    val sc = spark.sparkContext
+    val (inBody, marker) = (s"body-${java.util.UUID.randomUUID()}", s"marker-${java.util.UUID.randomUUID()}")
+    val seen = new ConcurrentLinkedQueue[Set[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(',').toSet))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(inBody)
+      try body finally sc.removeJobTag(inBody)
+      sc.addJobTag(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(marker)
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while (!seen.asScala.exists(_(marker)) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.asScala.exists(_(marker)), "the listener never saw the marker job")
+      seen.asScala.toSeq.filter(_(inBody))
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("retrying sink follows the backoff schedule then surfaces failure") {
     val sleeps = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -30,6 +69,30 @@ class SinksSpec extends SparkSpec {
         sleep = sleeps2.append).write(null, 0L)
     }
     assert(sleeps2.toSeq == Seq(10000L, 15000L)) // capped at maxMs
+  }
+
+  test("retrying sink rethrows an interrupted write at once, interrupt flag kept") {
+    val calls = new AtomicInteger()
+    val entered = new CountDownLatch(1)
+    val blocked = new BatchSink {
+      override def write(df: DataFrame, batchId: Long): Unit = {
+        calls.incrementAndGet(); entered.countDown()
+        Thread.sleep(60000)
+      }
+    }
+    @volatile var thrown: Throwable = null
+    @volatile var flagKept = false
+    val writer = new Thread(() =>
+      try new RetryingSink(blocked).write(null, 0L) // 10 s backoff, 5 attempts
+      catch { case e: Throwable => thrown = e; flagKept = Thread.currentThread().isInterrupted })
+    writer.setDaemon(true)
+    writer.start()
+    assert(entered.await(30, TimeUnit.SECONDS))
+    writer.interrupt()
+    writer.join(5000)
+    assert(!writer.isAlive, "the interrupted write is still backing off or retrying")
+    assert(calls.get == 1)
+    assert(thrown.isInstanceOf[InterruptedException] && flagKept)
   }
 
   test("parquet sink is idempotent under micro-batch replay") {
@@ -123,6 +186,68 @@ class SinksSpec extends SparkSpec {
       col("v").isNotNull, Some(dead)), 100L, 120L, Set(110L))
     assert(attempts == 2)
     assert(ids(delivered) == (100L until 120L).filter(_ != 110L) && ids(dead) == Seq(110L))
+  }
+
+  test("row-skipping sink dead-letters every bad row when a write task fails and is retried") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // 4 partitions of 10 rows; the bad rows (NULL v) all sit in partition 0
+    val df = spark.range(0L, 40L, 1L, 4).as[Long]
+      .map(i => (i, if (i < 5) None else Some(s"v$i"))).toDF("id", "v")
+    assert(spark.sparkContext.defaultParallelism >= 4) // the cache keeps the partitioning
+    val delivered = new CollectingSink()
+    val dead = new CollectingSink()
+    var attempts = 0
+    val flaky = new BatchSink {
+      override def write(df: DataFrame, batchId: Long): Unit = {
+        attempts += 1
+        // first attempt: partition 0's task reads its rows (filling its
+        // cached block), then fails; the retry is served from the cache
+        if (attempts == 1) df.foreachPartition { (rows: Iterator[Row]) =>
+          rows.foreach(_ => ())
+          if (TaskContext.getPartitionId() == 0) throw new IllegalStateException("write task down")
+        }
+        else delivered.write(df, batchId)
+      }
+    }
+    new RowSkippingSink(new RetryingSink(flaky, sleep = _ => ()), col("v").isNotNull, Some(dead))
+      .write(df, 0L)
+    assert(attempts == 2)
+    assert(delivered.rows.map(_.getLong(0)).sorted == (5L until 40L))
+    assert(dead.rows.map(_.getLong(0)).sorted == (0L until 5L), "bad rows were lost")
+  }
+
+  test("row-skipping sink runs one job beyond its inner write on a clean batch") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-sink-jobs").toString
+    val inners = Seq[BatchSink](new CollectingSink(), new ParquetAppendSink(s"$dir/t"))
+    for ((inner, batchId) <- inners.zipWithIndex) {
+      val dead = new CollectingSink()
+      val tagged = new TaggingSink("inner-write", inner)
+      val jobs = jobTagsOf {
+        new RowSkippingSink(tagged, col("v").isNotNull, Some(dead))
+          .write(Seq((1L, Some("x")), (2L, Some("y"))).toDF("id", "v"), batchId.toLong)
+      }
+      // the dead-letter count over the filled cache, and nothing else
+      assert(jobs.exists(_("inner-write")) && jobs.count(!_("inner-write")) == 1,
+        s"${inner.getClass.getSimpleName}: ${jobs.count(!_("inner-write"))} of " +
+          s"${jobs.size} jobs ran outside the inner write")
+      assert(dead.rows.isEmpty)
+    }
+    assert(spark.read.parquet(s"$dir/t").count() == 2)
+  }
+
+  test("row-skipping sink dead-letters bad rows when the inner sink never reads them") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val dead = new CollectingSink()
+    val ignoring = new BatchSink {
+      override def write(df: DataFrame, batchId: Long): Unit = ()
+    }
+    new RowSkippingSink(ignoring, col("v").isNotNull, Some(dead))
+      .write(Seq((1L, Some("x")), (2L, None), (3L, None)).toDF("id", "v"), 0L)
+    assert(dead.rows.map(_.getLong(0)).sorted == Seq(2L, 3L))
   }
 
   test("referencePolicy: query leg skips bad rows, response leg aborts the batch") {

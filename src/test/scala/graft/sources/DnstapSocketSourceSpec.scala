@@ -202,14 +202,17 @@ class DnstapSocketSourceSpec extends SparkSpec {
   test("non-positive maxFramesPerTrigger or maxFrameBytes is rejected " +
     "before the socket binds") {
     val sock = Files.createTempDirectory("graft-sock").resolve("d.sock").toString
-    for (key <- Seq("maxFramesPerTrigger", "maxFrameBytes"); v <- Seq("0", "-1")) {
+    val bad = (for (key <- Seq("maxFramesPerTrigger", "maxFrameBytes", "readers");
+                    v <- Seq("0", "-1")) yield key -> v) ++
+      Seq("readers" -> "abc", "readTimeoutSecs" -> "-1", "readTimeoutSecs" -> "abc")
+    for ((key, v) <- bad) {
       val opts = new CaseInsensitiveStringMap(
         java.util.Map.of("path", sock, key, v))
       val e = intercept[IllegalArgumentException] {
         // a stream that does get built must not keep the socket bound
         new DnstapSocketScan(opts).toMicroBatchStream("unused").stop()
       }
-      assert(e.getMessage.contains(s"'$key'"), e.getMessage)
+      assert(e.getMessage.contains(s"'$v' for option '$key'"), e.getMessage)
       assert(!Files.exists(Paths.get(sock)), s"$key=$v bound the socket")
     }
   }

@@ -1,12 +1,17 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
 import graft.codec.{DnsWire, DnstapCodec}
-import graft.sinks.{CollectingSink, ColumnProjection, PartitionRecordingSink}
+import graft.sinks.{BatchSink, CollectingSink, ColumnProjection, PartitionRecordingSink}
 
 /** End-to-end drive of the full streaming topology (SURVEY §3): raw dnstap
   * frames through a MemoryStream source → decode/parse/explode → W1
@@ -102,6 +107,73 @@ class DnstapPipelineSpec extends SparkSpec {
       ("NXDOMAIN", "10.0.0.1", "a.example.", 1L),
       ("NXDOMAIN", "10.0.0.1", "__ANY__", 1L),
       ("NXDOMAIN", "__ANY__", "a.example.", 1L)))
+  }
+
+  /** Records each write's batch id, the writing thread and the
+    * `streaming.sql.batchId` local property that thread carries. */
+  private final class ThreadRecordingSink(inner: BatchSink) extends BatchSink {
+    val seen = new ConcurrentLinkedQueue[(Long, Thread, String)]()
+    override def write(df: DataFrame, batchId: Long): Unit = {
+      seen.add((batchId, Thread.currentThread(),
+        spark.sparkContext.getLocalProperty("streaming.sql.batchId")))
+      inner.write(df, batchId)
+    }
+  }
+
+  test("each W1 leg writes on its own thread, carrying its batch's batchId") {
+    val qSink = new CollectingSink()
+    val rSink = new CollectingSink()
+    val (q, r) = (new ThreadRecordingSink(qSink), new ThreadRecordingSink(rSink))
+    run(DnstapPipeline.Config(clientResponseTimeSamples = false),
+      DnstapPipeline.Sinks(q, r, new CollectingSink())) {
+      qSink.rows.nonEmpty && rSink.rows.nonEmpty
+    }
+    val (qSeen, rSeen) = (q.seen.asScala.toSeq, r.seen.asScala.toSeq)
+    assert(qSeen.nonEmpty && rSeen.nonEmpty)
+    (qSeen ++ rSeen).foreach { case (batchId, _, prop) =>
+      assert(prop == batchId.toString, s"batch $batchId written under batchId $prop")
+    }
+    // the two legs of a batch run concurrently, on two threads
+    val pairs = for ((bq, tq, _) <- qSeen; (br, tr, _) <- rSeen if bq == br) yield tq ne tr
+    assert(pairs.nonEmpty && pairs.forall(identity))
+  }
+
+  test("a failing response sink fails the batch, and the query leg does not outlive it") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val entered = new CountDownLatch(1)
+    @volatile var queryLegInterrupted = false
+    @volatile var queryLegEnded = false
+    val slowQueries = new BatchSink {
+      override def write(df: DataFrame, batchId: Long): Unit = {
+        entered.countDown()
+        try Thread.sleep(120000)
+        catch { case e: InterruptedException => queryLegInterrupted = true; throw e }
+        finally queryLegEnded = true
+      }
+    }
+    val failingResponses = new BatchSink {
+      override def write(df: DataFrame, batchId: Long): Unit = {
+        entered.await(30, TimeUnit.SECONDS) // fail while the query leg writes
+        throw new RuntimeException("response store down")
+      }
+    }
+    val mem = MemoryStream[Array[Byte]]
+    val ckpt = Files.createTempDirectory("graft-pipeline-fail-spec").toString
+    val running = DnstapPipeline.start(spark, mem.toDS(),
+      DnstapPipeline.Config(clientResponseTimeSamples = false),
+      DnstapPipeline.Sinks(slowQueries, failingResponses, new CollectingSink()),
+      ckpt, instantTriggers = true)
+    try {
+      mem.addData(frames)
+      val e = intercept[StreamingQueryException] {
+        running.foreach(_.awaitTermination(60000))
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(_.getMessage == "response store down"), e.toString)
+      assert(queryLegInterrupted, "the query leg was not interrupted")
+      assert(queryLegEnded, "the query leg outlived the failed batch")
+    } finally running.foreach(_.stop())
   }
 
   test("frames flow through the W2 latency branch to the samples sink") {
