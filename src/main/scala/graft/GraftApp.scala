@@ -108,19 +108,15 @@ object GraftApp {
       new graft.sinks.RetryingSink(inner, maxAttempts = 3)
     }
 
-    // row-level policy (clickhouse.go:190-205): malformed QUERY rows are
-    // skipped — diverted to a dead-letter parquet table instead of the
-    // reference's log-and-lose — while response/sample batches stay
-    // all-or-nothing (undecorated sinks abort on error)
-    import org.apache.spark.sql.functions.col
+    // every leg is all-or-nothing. The reference's query writer skips rows
+    // its driver rejects on Append (clickhouse.go:190-205); here a rejected
+    // insert fails the write and RetryingSink retries it, and the query rows
+    // never carry a null queryTime or identity (DnstapPipelineSpec)
     DnstapPipeline.start(spark, frames, cfg.pipelineConfig,
-      DnstapPipeline.Sinks.referencePolicy(
+      DnstapPipeline.Sinks(
         queries = sink(cfg.queryTable, cfg.queryProjection),
         responses = sink(cfg.responseTable, cfg.responseProjection),
-        samples = sink(cfg.queryResponseTimeTable, cfg.sampleProjection),
-        queryRowValid = col("queryTime").isNotNull && col("identity").isNotNull,
-        deadLetter = Some(new ParquetAppendSink(
-          s"$outputDir/_dead_letter/${cfg.queryTable}"))),
+        samples = sink(cfg.queryResponseTimeTable, cfg.sampleProjection)),
       checkpointRoot = checkpointDir,
       instantTriggers = instantTriggers)
   }

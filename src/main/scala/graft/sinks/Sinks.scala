@@ -107,6 +107,11 @@ final class CollectingSink(projection: ColumnProjection = ColumnProjection.ident
   * log-and-lose) and the remainder is delivered. Abort-on-error batches
   * are simply the undecorated [[BatchSink]].
   *
+  * `GraftApp` no longer wires it: none of its query rows can carry a null
+  * `queryTime` or `identity`, so its query leg is undecorated like the
+  * others. Only specs and the benchmark's traced path and sinks lane still
+  * reach it.
+  *
   * The batch is cached, so the upstream plan runs once; the inner write
   * fills the cache, and whether any row failed `valid` is then decided by
   * one single-stage count over it. That count is exact whatever the

@@ -58,22 +58,6 @@ object DnstapPipeline {
   final case class Sinks(queries: BatchSink, responses: BatchSink,
                          samples: BatchSink)
 
-  object Sinks {
-    /** The reference's per-row delivery policy, composed
-      * (clickhouse.go:201-204 vs 244-247): the QUERY leg skips rows
-      * failing `queryRowValid` (optionally dead-lettering them) and
-      * still delivers the remainder, while the response and sample legs
-      * stay abort-on-error — any failure there propagates and the
-      * whole batch retries via the checkpoint (an at-least-once upgrade
-      * over the reference's drop-after-max-retries). */
-    def referencePolicy(queries: BatchSink, responses: BatchSink,
-                        samples: BatchSink,
-                        queryRowValid: org.apache.spark.sql.Column,
-                        deadLetter: Option[BatchSink] = None): Sinks =
-      Sinks(new graft.sinks.RowSkippingSink(queries, queryRowValid, deadLetter),
-        responses, samples)
-  }
-
   /** Start the pipeline over a streaming Dataset of raw frames.
     *
     * @param frames  streaming source column of BINARY dnstap frames
@@ -106,9 +90,7 @@ object DnstapPipeline {
           // its sibling (Par.eval) and fails the batch.
           val legs = Seq.newBuilder[() => Unit]
           if (cfg.clientQueries) legs += { () =>
-            val rows = batch.flatMap(b =>
-              DnstapCodec.decode(b).toSeq.flatMap(DnstapRows.toQueryRows(_))).toDF()
-            sinks.queries.write(aggregateQueries(rows, cfg), batchId)
+            sinks.queries.write(aggregateQueries(queryRows(batch), cfg), batchId)
           }
           if (cfg.nonOkClientResponses) legs += { () =>
             // keepSuccess=false here is Fl4+Fl5: NOERROR rows never reach
@@ -203,6 +185,13 @@ object DnstapPipeline {
     }
 
     queries.result()
+  }
+
+  /** W1's client-query rows of a batch of raw frames (Fl1, Fl2, P1–P8, F1). */
+  def queryRows(frames: Dataset[Array[Byte]]): DataFrame = {
+    val spark = frames.sparkSession
+    import spark.implicits._
+    frames.flatMap(b => DnstapCodec.decode(b).toSeq.flatMap(DnstapRows.toQueryRows(_))).toDF()
   }
 
   /** A1 (or A3 pass-through when aggregate=false) on a micro-batch. */

@@ -3,11 +3,16 @@ package graft
 import java.net.UnixDomainSocketAddress
 import java.nio.channels.{Channels, SocketChannel}
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.concurrent.{blocking, Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.storage.StorageLevel
 
 import graft.codec.{DnsWire, DnstapCodec}
 import graft.config.GraftConfig
@@ -215,9 +220,104 @@ class GraftAppSpec extends SparkSpec {
       assert(rCount() == 3,
         s"response sink count mismatch; last swallowed poll error: " +
           lastPollErr.fold("none")(_.toString))
-      // the response write follows the query write's dead-letter step in
-      // the same batch, so a clean input has left no dead-letter table
+      // the app wires no dead-letter table; a leftover one would mean a
+      // row-skipping decorator is back on the query leg
       assert(!Files.exists(Paths.get(s"$root/out/_dead_letter")))
     } finally queries.foreach(_.stop())
+  }
+
+  /** Streams `frames` to the app's socket over one framestream connection. */
+  private def emit(sock: String, frames: Seq[Array[Byte]]): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!Files.exists(Paths.get(sock)) && System.nanoTime() < deadline) Thread.sleep(50)
+    val conn = SocketChannel.open(UnixDomainSocketAddress.of(sock))
+    try {
+      val out = Channels.newOutputStream(conn)
+      FrameStreams.writeControlFrame(out, FrameStreams.ControlStart,
+        Seq(FrameStreams.ContentTypeDnstap))
+      frames.foreach(FrameStreams.writeDataFrame(out, _))
+      FrameStreams.writeControlFrame(out, FrameStreams.ControlStop)
+    } finally conn.close()
+  }
+
+  test("the app's query leg writes uncached, in no more Spark jobs than the response leg") {
+    val root = Files.createTempDirectory("graft-app-jobs")
+    val sock = root.resolve("d.sock").toString
+    val cfg = GraftConfig.fromToml(
+      s"""[Dnstap]
+         |UnixSocket = "$sock"
+         |ClientResponseTimeSamples = false
+         |""".stripMargin)
+    val a = Array[Byte](10, 0, 0, 1)
+    val frames = (0 until 20).map(i => frame(isResponse = false, a, 1000, i, s"n$i.example.", 0, 1000L)) :+
+      frame(isResponse = true, a, 1000, 0, "n0.example.", 3, 1001L)
+
+    // each job's streaming query, batch, SQL execution and tags, and
+    // whether one of its stages computes a persisted RDD
+    final case class Job(query: String, batch: String, execution: Option[Long],
+                         tags: String, cached: Boolean)
+    val jobs = new ConcurrentLinkedQueue[Job]()
+    val plans = new ConcurrentHashMap[Long, String]() // SQL execution -> physical plan
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.physicalPlanDescription)
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties).getOrElse(new java.util.Properties())
+        jobs.add(Job(p.getProperty("sql.streaming.queryId"), p.getProperty("streaming.sql.batchId"),
+          Option(p.getProperty("spark.sql.execution.id")).map(_.toLong),
+          p.getProperty("spark.job.tags", ""),
+          e.stageInfos.exists(_.rddInfos.exists(_.storageLevel != StorageLevel.NONE))))
+      }
+    }
+    val sc = spark.sparkContext
+    // other suites in this JVM may have left RDDs persisted on the shared context
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    val queries = GraftApp.start(spark, cfg,
+      outputDir = s"$root/out", checkpointDir = s"$root/ckpt", instantTriggers = true)
+    try {
+      val Seq(agg) = queries
+      emit(sock, frames)
+      // a batch reports progress once it has committed; the source's
+      // offset counts frames
+      def committed = agg.recentProgress.exists(_.sources.exists(_.endOffset == frames.size.toString))
+      val end = System.nanoTime() + 90L * 1000000000L
+      while (!committed && System.nanoTime() < end) {
+        agg.exception.foreach(e => throw e)
+        Thread.sleep(100)
+      }
+      assert(committed, "the frames' batches did not commit in 90 s")
+      val persisted = sc.getPersistentRDDs -- persistedBefore
+      assert(persisted.isEmpty, s"still persisted: ${persisted.values}")
+      // a marker job run now shows that the listener has seen every batch job
+      val marker = s"marker-${java.util.UUID.randomUUID()}"
+      sc.addJobTag(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(marker)
+      val seen = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.asScala.exists(_.tags.contains(marker)) && System.nanoTime() < seen) Thread.sleep(10)
+      assert(jobs.asScala.exists(_.tags.contains(marker)), "the listener never saw the marker job")
+
+      val mine = jobs.asScala.toSeq.filter(_.query == agg.id.toString)
+      assert(mine.nonEmpty)
+      assert(!mine.exists(_.cached), s"a W1 job computed a persisted RDD: $mine")
+      // a job belongs to the leg whose table its SQL execution writes
+      def leg(j: Job): Option[String] =
+        j.execution.flatMap(id => Option(plans.get(id))).flatMap { plan =>
+          Seq("clientQuery", "clientResponse").find(t => plan.contains(s"/out/$t/"))
+        }
+      assert(mine.forall(leg(_).isDefined),
+        s"jobs outside both legs' writes: ${mine.filter(leg(_).isEmpty)}")
+      mine.groupBy(_.batch).foreach { case (batch, js) =>
+        val n = js.groupMapReduce(leg(_).get)(_ => 1)(_ + _)
+        assert(n.getOrElse("clientQuery", 0) <= n.getOrElse("clientResponse", 0),
+          s"batch $batch jobs per leg: $n")
+      }
+      assert(!Files.exists(Paths.get(s"$root/out/_dead_letter")))
+    } finally {
+      queries.foreach(_.stop())
+      sc.removeSparkListener(listener)
+    }
   }
 }

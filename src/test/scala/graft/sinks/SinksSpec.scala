@@ -250,32 +250,6 @@ class SinksSpec extends SparkSpec {
     assert(dead.rows.map(_.getLong(0)).sorted == Seq(2L, 3L))
   }
 
-  test("referencePolicy: query leg skips bad rows, response leg aborts the batch") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val q = new CollectingSink()
-    val dead = new CollectingSink()
-    final class ExplodingSink extends graft.sinks.BatchSink {
-      var calls = 0
-      override def write(df: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
-        calls += 1; throw new RuntimeException("store down")
-      }
-    }
-    val r = new ExplodingSink
-    val sinks = graft.streaming.DnstapPipeline.Sinks.referencePolicy(
-      q, r, new CollectingSink(), queryRowValid = col("v").isNotNull,
-      deadLetter = Some(dead))
-    // query leg: the invalid row diverts, the remainder delivers
-    sinks.queries.write(Seq((1L, Some("x")), (2L, None)).toDF("id", "v"), 0L)
-    assert(q.rows.map(_.getLong(0)) == Seq(1L))
-    assert(dead.rows.map(_.getLong(0)) == Seq(2L))
-    // response leg: abort-on-error propagates (checkpoint replays it)
-    val e = intercept[RuntimeException] {
-      sinks.responses.write(Seq((9L, Some("y"))).toDF("id", "v"), 0L)
-    }
-    assert(e.getMessage == "store down" && r.calls == 1)
-  }
-
   test("compaction collapses per-batch partitions into few files, rows intact") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-compact")

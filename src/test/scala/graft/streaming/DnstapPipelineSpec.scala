@@ -1,7 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -11,7 +12,8 @@ import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
 import graft.codec.{DnsWire, DnstapCodec}
-import graft.sinks.{BatchSink, CollectingSink, ColumnProjection, PartitionRecordingSink}
+import graft.sinks.{BatchSink, CollectingSink, ColumnProjection, ParquetAppendSink,
+  PartitionRecordingSink, RetryingSink}
 
 /** End-to-end drive of the full streaming topology (SURVEY §3): raw dnstap
   * frames through a MemoryStream source → decode/parse/explode → W1
@@ -107,6 +109,69 @@ class DnstapPipelineSpec extends SparkSpec {
       ("NXDOMAIN", "10.0.0.1", "a.example.", 1L),
       ("NXDOMAIN", "10.0.0.1", "__ANY__", 1L),
       ("NXDOMAIN", "__ANY__", "a.example.", 1L)))
+  }
+
+  test("the query leg's rows never carry a null queryTime or identity, aggregated or not") {
+    import spark.implicits._
+    def query(identity: Option[String], sec: Option[Long], nsec: Option[Int],
+              payload: Option[Array[Byte]]): Array[Byte] =
+      DnstapCodec.encode(DnstapCodec.Frame(DnstapCodec.TypeMessage, identity,
+        Some(DnstapCodec.Message(DnstapCodec.ClientQuery, queryAddress = Some(a),
+          queryPort = Some(53), queryTimeSec = sec, queryTimeNsec = nsec,
+          queryMessage = payload))))
+    val wire = Some(DnsWire.encode(1, 0, false, Seq(DnsWire.Question("c.example.", 1))))
+    val odd = Seq(
+      query(Some("ns1"), None, None, wire),       // no query timestamp
+      query(Some("ns1"), Some(1000L), None, wire), // seconds only
+      query(Some("ns1"), None, Some(5), wire),     // nanoseconds only
+      query(None, Some(1000L), Some(0), wire),     // no identity
+      query(None, None, None, wire),               // neither
+      query(Some("ns1"), Some(1000L), Some(0), Some(Array[Byte](1, 2, 3))), // malformed DNS
+      query(Some("ns1"), Some(1000L), Some(0), None), // no DNS payload
+      DnstapCodec.encode(DnstapCodec.Frame(DnstapCodec.TypeMessage + 1, Some("ns1"))), // not a MESSAGE
+      Array[Byte](-1, -1, -1)) // not a dnstap frame
+    // `frames` adds well-formed queries and CLIENT_RESPONSE frames
+    val rows = DnstapPipeline.queryRows((frames ++ odd).toDS())
+    for (aggregate <- Seq(true, false)) {
+      val out = DnstapPipeline.aggregateQueries(rows, DnstapPipeline.Config(aggregate = aggregate))
+        .select("queryTime", "identity").collect()
+      assert(out.nonEmpty && out.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+        s"aggregate=$aggregate: ${out.filter(r => r.isNullAt(0) || r.isNullAt(1)).toSeq}")
+      // the five odd queries with a well-formed payload all reach the
+      // sink, the two without an identity under ""
+      if (!aggregate) assert(out.length == 3 + 5 && out.count(_.getString(1) == "") == 2)
+    }
+  }
+
+  test("a query write that fails once is retried from the batch's frames: same sums, one batch directory") {
+    val dir = Files.createTempDirectory("graft-retry-spec").toString + "/q"
+    val parquet = new ParquetAppendSink(dir)
+    val attempts = new AtomicInteger()
+    val delivered = new CountDownLatch(1)
+    val failsOnce = new BatchSink {
+      override def write(df: DataFrame, batchId: Long): Unit = {
+        if (attempts.incrementAndGet() == 1) {
+          parquet.write(df.limit(2), batchId) // part of the batch lands, then the write fails
+          throw new RuntimeException("sink down")
+        }
+        parquet.write(df, batchId)
+        delivered.countDown()
+      }
+    }
+    run(DnstapPipeline.Config(clientResponseTimeSamples = false),
+      DnstapPipeline.Sinks(new RetryingSink(failsOnce, maxAttempts = 3, sleep = _ => ()),
+        new CollectingSink(), new CollectingSink()))(delivered.getCount == 0)
+    assert(attempts.get == 2)
+    // per-key counter sums over the table: `frames`' 2 full keys x 3 grouping sets
+    val sums = spark.read.parquet(dir).collect().toSeq.groupMapReduce(r =>
+      (r.getAs[String]("queryAddress"), r.getAs[String]("questionName")))(_.getAs[Long]("counter"))(_ + _)
+    assert(sums == Map(("10.0.0.1", "a.example.") -> 2L, ("10.0.0.1", "__ANY__") -> 2L,
+      ("__ANY__", "a.example.") -> 2L, ("10.0.0.9", "b.example.") -> 1L,
+      ("10.0.0.9", "__ANY__") -> 1L, ("__ANY__", "b.example.") -> 1L))
+    val batchDirs = Files.list(Paths.get(dir))
+    try assert(batchDirs.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("__batch_id=")).toSeq == Seq("__batch_id=0"))
+    finally batchDirs.close()
   }
 
   /** Records each write's batch id, the writing thread and the
