@@ -7,10 +7,11 @@ SPANS is a `spans.jsonl` written by `perfbench/run.py --trace 1`, or the
 run's directory under `.bench_traces/`; without it the newest
 `.bench_traces/*/spans.jsonl` is read. For every micro-batch span it prints,
 in milliseconds from the batch's start, the batch's `durationMs` parts
-(laid end to end, as the benchmark records them), the sink writes and the
-Spark jobs that hang under it. The summary gives, per streaming query, the
-number of batches, the jobs per batch, the median trigger and sink-write
-times, and how long the batch's top-level sink writes ran at once. It reads
+(laid end to end in the order Spark runs them, see PARTS), the sink writes
+and the Spark jobs that hang under it. The summary gives, per streaming
+query, the number of batches, the jobs per batch, the median trigger and
+sink-write times, how long the batch's top-level sink writes ran at once,
+and the gap from the start of `addBatch` to the first sink write. It reads
 only; nothing is written.
 """
 import argparse
@@ -22,6 +23,15 @@ import statistics
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# The order Spark 4.1.2's MicroBatchExecution runs a batch's `durationMs`
+# parts in, under a processing-time trigger: constructNextBatch reports
+# latestOffset and then walCommit (the offset-log write), runBatch reports
+# getBatch, queryPlanning and addBatch, and markMicroBatchEnd reports
+# commitOffsets (the commit-log write). The progress report gives
+# durations only; the trace lays them end to end in another order, so they
+# are laid out again here.
+PARTS = ("latestOffset", "walCommit", "getBatch", "queryPlanning", "addBatch", "commitOffsets")
 
 
 def spans_path(arg):
@@ -54,6 +64,18 @@ def overlap_ms(spans):
     return ms(total)
 
 
+def lay_out(batch, parts):
+    """`parts` moved end to end from the batch's start, in PARTS order."""
+    took = {p["name"][len("batch."):]: p for p in parts}
+    t, laid = batch["start_ns"], []
+    for name in PARTS:
+        if name in took:
+            p = took[name]
+            laid.append({**p, "start_ns": t, "end_ns": t + p["end_ns"] - p["start_ns"]})
+            t = laid[-1]["end_ns"]
+    return laid
+
+
 def p50(xs):
     return statistics.median(xs) if xs else 0.0
 
@@ -77,7 +99,7 @@ def main():
     for b in batches:
         query = b["name"][len("batch:"):]
         kids = sorted(children[b["id"]], key=lambda s: s["start_ns"])
-        parts = [k for k in kids if k["name"].startswith("batch.")]
+        parts = lay_out(b, [k for k in kids if k["name"].startswith("batch.")])
         sinks = [k for k in kids if k["name"].startswith("sink:")]
         # the sink stack's outer writes, not its retried attempts
         writes = [k for k in sinks if not k["name"].endswith(".attempt")]
@@ -88,6 +110,9 @@ def main():
         stats["write_ms"].append(ms(max((w["end_ns"] for w in writes), default=0)
                                     - min((w["start_ns"] for w in writes), default=0)))
         stats["overlap_ms"].append(overlap_ms(writes))
+        add = [p for p in parts if p["name"] == "batch.addBatch"]
+        if add and writes:
+            stats["gap_ms"].append(ms(min(w["start_ns"] for w in writes) - add[0]["start_ns"]))
         print(f"\n{b['id']}  trigger {ms(b['end_ns'] - b['start_ns']):.0f} ms, "
               f"{len(jobs)} jobs, {len(writes)} sink writes")
         for k in parts + sinks + jobs:
@@ -101,7 +126,8 @@ def main():
               f"(min {min(jobs)}, max {max(jobs)}, total {sum(jobs)}); "
               f"trigger_ms p50 {p50(st['trigger_ms']):.0f}; "
               f"sink writes first start .. last end p50 {p50(st['write_ms']):.0f} ms; "
-              f"writes running at once p50 {p50(st['overlap_ms']):.0f} ms")
+              f"writes running at once p50 {p50(st['overlap_ms']):.0f} ms; "
+              f"addBatch start .. first sink write p50 {p50(st['gap_ms']):.0f} ms")
 
 
 if __name__ == "__main__":

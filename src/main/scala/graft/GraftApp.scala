@@ -25,6 +25,19 @@ import graft.streaming.DnstapPipeline
   * still supplies auth/TLS options. With neither, batches append to
   * parquet under `GRAFT_OUTPUT_DIR` (lake-native default), one directory
   * per configured table name.
+  *
+  * Checkpoint I/O: each micro-batch writes an offset-log entry before it
+  * runs and a commit-log entry after, so their cost bounds freshness.
+  * `GraftConfig.sparkStreamingOptions` writes both through Spark's
+  * `FileSystemBasedCheckpointFileManager` (a temp file, then
+  * `FileSystem.rename`) rather than the default `FileContext`-based one,
+  * and maps `file:` to `graft.sinks.LocalFileSystemNoChmod`, which sets
+  * permissions in-process where Hadoop without libhadoop forks `chmod`
+  * for every file and directory, parquet sink output included. Both keep
+  * the checkpoint layout, so a checkpoint written under Spark's defaults
+  * resumes under these. Spark relies on `rename` being atomic, which
+  * POSIX `rename(2)` is locally and HDFS's rename is too. The W2
+  * matcher's RocksDB state uploads go through the same manager.
   */
 object Main {
   def main(args: Array[String]): Unit = {

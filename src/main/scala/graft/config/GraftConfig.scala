@@ -245,13 +245,20 @@ final case class GraftConfig(
   def jdbcAuthOptions: Map[String, String] =
     Map("user" -> username, "password" -> password)
 
-  /** Spark-session streaming options derived from the [Spark] extension
-    * section — applied at session build (Main), overridable per-process
-    * with SPARK_GRAFT_STATESTORE for ops experiments. */
+  /** Spark-session options for the streaming app, applied at session build
+    * (Main). The two state-store entries come from the [Spark] extension
+    * section; SPARK_GRAFT_STATESTORE overrides the provider per process.
+    * The two checkpoint entries come from no section: every micro-batch
+    * writes its offset and commit logs through Hadoop's `FileSystem`
+    * instead of `FileContext`, over a `file:` filesystem that sets
+    * permissions without forking `chmod` (see `Main`). */
   def sparkStreamingOptions: Map[String, String] = Map(
     "spark.sql.streaming.stateStore.providerClass" -> stateStoreProvider,
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-      rocksdbChangelogCheckpointing.toString)
+      rocksdbChangelogCheckpointing.toString,
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager].getName,
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sinks.LocalFileSystemNoChmod].getName)
 
   /** Effective-config audit surface (toml.go:96-122,193: the reference
     * reflection-prints every patched field as `Config <Section> <Field>:

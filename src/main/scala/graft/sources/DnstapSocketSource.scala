@@ -41,7 +41,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * exponential schedule (wait*2+1 capped at 60 s, dnstap.go:112-124).
   */
 final class DnstapSocketDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-dnstap"
+  override def shortName(): String = DnstapSocketSource.Name
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     DnstapSocketSource.Schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -50,6 +50,7 @@ final class DnstapSocketDataSource extends TableProvider with DataSourceRegister
 }
 
 object DnstapSocketSource {
+  val Name = "graft-dnstap"
   val Schema: StructType = StructType(Seq(StructField("value", BinaryType)))
   /** Reference cap on the reader pool (dnstap.go:38). */
   val MaxReaders = 32
@@ -190,6 +191,9 @@ final class DnstapSocketMicroBatchStream(path: String, readers: Int,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = FrameReaderFactory
+
+  /** The source's `description` in streaming progress reports. */
+  override def toString: String = s"${DnstapSocketSource.Name}[$path]"
 
   override def commit(end: Offset): Unit = lock.synchronized {
     val e = end.asInstanceOf[FrameOffset].n

@@ -320,4 +320,45 @@ class GraftAppSpec extends SparkSpec {
       sc.removeSparkListener(listener)
     }
   }
+
+  test("the stats line counts every frame the app read once: N frames sent, inputRows N") {
+    val root = Files.createTempDirectory("graft-app-stats")
+    val sock = root.resolve("d.sock").toString
+    val cfg = GraftConfig.fromToml(
+      s"""[Dnstap]
+         |UnixSocket = "$sock"
+         |ClientResponseTimeSamples = false
+         |""".stripMargin)
+    val a = Array[Byte](10, 0, 0, 1)
+    val frames = (0 until 20).map(i => frame(isResponse = false, a, 1000, i, s"n$i.example.", 0, 1000L)) :+
+      frame(isResponse = true, a, 1000, 0, "n0.example.", 3, 1001L)
+    val lines = new ConcurrentLinkedQueue[String]()
+    val stats = graft.streaming.StatsReporter.attach(spark, Set("graft-dnstap-agg"),
+      graft.streaming.StatsReporter.Schedule(initialSecs = 1), log = lines.add(_))
+    val queries = GraftApp.start(spark, cfg,
+      outputDir = s"$root/out", checkpointDir = s"$root/ckpt", instantTriggers = true)
+    try {
+      val Seq(agg) = queries
+      emit(sock, frames)
+      def committed = agg.recentProgress.exists(_.sources.exists(_.endOffset == frames.size.toString))
+      val end = System.nanoTime() + 90L * 1000000000L
+      while (!committed && System.nanoTime() < end) {
+        agg.exception.foreach(e => throw e)
+        Thread.sleep(100)
+      }
+      assert(committed, "the frames' batches did not commit in 90 s")
+      val progress = agg.recentProgress.toSeq
+      assert(progress.flatMap(_.sources).forall(_.description == s"graft-dnstap[$sock]"))
+      // Spark's own count holds each frame twice, once per W1 leg
+      assert(progress.map(_.numInputRows).sum == 2 * frames.size)
+      assert(progress.map(graft.streaming.StatsReporter.inputRows).sum == frames.size)
+      val want = s" inputRows=${frames.size} "
+      val seen = System.nanoTime() + 60L * 1000000000L
+      while (!lines.asScala.exists(_.contains(want)) && System.nanoTime() < seen) Thread.sleep(100)
+      assert(lines.asScala.exists(_.contains(want)), lines)
+    } finally {
+      stats.close()
+      queries.foreach(_.stop())
+    }
+  }
 }

@@ -64,7 +64,10 @@ class GraftConfigSpec extends AnyFunSuite {
       Map("spark.sql.streaming.stateStore.providerClass" ->
         GraftConfig.RocksDbProvider,
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          "true"))
+          "true",
+        "spark.sql.streaming.checkpointFileManagerClass" ->
+          "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+        "spark.hadoop.fs.file.impl" -> "graft.sinks.LocalFileSystemNoChmod"))
     // a deployment can patch it back to the HDFS-backed default (or any
     // custom provider) through the same TOML reflection-patch path
     val c = GraftConfig.fromToml(

@@ -7,8 +7,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
 import graft.SparkSpec
 import graft.codec.{DnsWire, DnstapCodec}
@@ -172,6 +172,123 @@ class DnstapPipelineSpec extends SparkSpec {
     try assert(batchDirs.iterator().asScala.map(_.getFileName.toString)
       .filter(_.startsWith("__batch_id=")).toSeq == Seq("__batch_id=0"))
     finally batchDirs.close()
+  }
+
+  test("Spark's numInputRows counts a W1 frame once per leg that scans the batch") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    def inputRows(cfg: DnstapPipeline.Config): Long = {
+      val mem = MemoryStream[Array[Byte]]
+      val ckpt = Files.createTempDirectory("graft-input-rows-spec").toString
+      val Seq(q) = DnstapPipeline.start(spark, mem.toDS(), cfg,
+        DnstapPipeline.Sinks(new CollectingSink(), new CollectingSink(), new CollectingSink()),
+        ckpt, instantTriggers = true)
+      try {
+        mem.addData(frames)
+        q.processAllAvailable()
+        q.recentProgress.map(_.numInputRows).sum
+      } finally q.stop()
+    }
+    val w1 = DnstapPipeline.Config(clientResponseTimeSamples = false)
+    assert(inputRows(w1.copy(nonOkClientResponses = false)) == frames.size)
+    assert(inputRows(w1) == 2 * frames.size)
+  }
+
+  test("W1 stopped mid-batch under Spark's default checkpoint manager resumes under the app's") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val root = Files.createTempDirectory("graft-restart-spec")
+    val (ckpt, out) = (s"$root/ckpt", s"$root/out")
+    val cfg = DnstapPipeline.Config(clientResponseTimeSamples = false)
+    // batch b: three queries under its own names and one NXDOMAIN response
+    def batch(b: Int): Seq[Array[Byte]] = (0 until 3).map(i =>
+      frame(isResponse = false, "ns1", a, 1000 + i, i, s"b$b-$i.example.", 1, 0, 1000L + b, 0)) :+
+      frame(isResponse = true, "ns1", a, 1000, 0, s"b$b-0.example.", 1, 3, 1001L + b, 0)
+    val mem = MemoryStream[Array[Byte]]
+    def start(queries: BatchSink): StreamingQuery = {
+      val Seq(q) = DnstapPipeline.start(spark, mem.toDS(), cfg,
+        DnstapPipeline.Sinks(queries, new ParquetAppendSink(s"$out/r"), new CollectingSink()),
+        ckpt, instantTriggers = true)
+      q
+    }
+    def fileManager(q: StreamingQuery): AnyRef = {
+      val log = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.offsetLog
+      log.getClass.getMethod("fileManager").invoke(log)
+    }
+    def names(dir: String): Seq[String] = {
+      val s = Files.list(Paths.get(dir))
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+    }
+    val parquet = new ParquetAppendSink(s"$out/q")
+
+    // first run, under Spark's defaults: batch 1's query leg writes its
+    // table and then waits until the query is stopped
+    assert(spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass").isEmpty)
+    val entered = new CountDownLatch(1)
+    val first = start(new BatchSink {
+      override def write(df: DataFrame, batchId: Long): Unit = {
+        parquet.write(df, batchId)
+        if (batchId == 1) {
+          entered.countDown()
+          new CountDownLatch(1).await(120, TimeUnit.SECONDS)
+        }
+      }
+    })
+    try {
+      mem.addData(batch(0))
+      first.processAllAvailable()
+      assert(fileManager(first).getClass.getSimpleName == "FileContextBasedCheckpointFileManager")
+      mem.addData(batch(1))
+      assert(entered.await(60, TimeUnit.SECONDS), "batch 1 never reached the query sink")
+    } finally first.stop()
+    assert(names(s"$ckpt/agg/offsets").contains("1") && !names(s"$ckpt/agg/commits").contains("1"))
+    val recorded = Files.readString(Paths.get(s"$ckpt/agg/offsets/1"))
+    mem.addData(batch(2)) // arrives while the query is down
+
+    // second run, under the app's settings. A session sets Hadoop keys
+    // without the builder's `spark.hadoop.` prefix, and a `file:` filesystem
+    // cached earlier in this JVM would hide a new `fs.file.impl`
+    val app = graft.config.GraftConfig.defaults.sparkStreamingOptions
+    val settings = Map(
+      "spark.sql.streaming.checkpointFileManagerClass" -> app("spark.sql.streaming.checkpointFileManagerClass"),
+      "fs.file.impl" -> app("spark.hadoop.fs.file.impl"),
+      "fs.file.impl.disable.cache" -> "true")
+    val written = new ConcurrentLinkedQueue[Long]()
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val second = start(new BatchSink {
+        override def write(df: DataFrame, batchId: Long): Unit = {
+          written.add(batchId)
+          parquet.write(df, batchId)
+        }
+      })
+      try {
+        second.processAllAvailable()
+        val m = fileManager(second)
+        assert(m.getClass.getSimpleName == "FileSystemBasedCheckpointFileManager")
+        assert(m.getClass.getMethod("fs").invoke(m).getClass.getName == app("spark.hadoop.fs.file.impl"))
+      } finally second.stop()
+    } finally settings.keys.foreach(spark.conf.unset)
+
+    // the restart re-ran batch 1 over its recorded offsets, then batch 2
+    assert(written.asScala.toSeq == Seq(1L, 2L))
+    assert(Files.readString(Paths.get(s"$ckpt/agg/offsets/1")) == recorded)
+    // each batch directory holds its own batch, once
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    Seq("q", "r").foreach(t =>
+      assert(names(s"$out/$t") == Seq("__batch_id=0", "__batch_id=1", "__batch_id=2"), t))
+    (0 to 2).foreach { b =>
+      assert(rows(spark.read.parquet(s"$out/q/__batch_id=$b")) ==
+        rows(DnstapPipeline.aggregateQueries(DnstapPipeline.queryRows(batch(b).toDS()), cfg)), s"batch $b")
+      val responses = spark.read.parquet(s"$out/r/__batch_id=$b").collect()
+      assert(responses.map(_.getAs[String]("questionName")).toSet == Set(s"b$b-0.example.", "__ANY__") &&
+        responses.length == 3 && responses.forall(_.getAs[Long]("counter") == 1L), s"batch $b")
+    }
+    // both managers leave the same files per log entry (batch 0's were
+    // written under Spark's defaults, batch 2's under the app's), and no temp file
+    val layout = (0 to 2).flatMap(b => Seq(s"$b", s".$b.crc")).sorted
+    assert(names(s"$ckpt/agg/offsets") == layout)
+    assert(names(s"$ckpt/agg/commits") == layout)
   }
 
   /** Records each write's batch id, the writing thread and the
