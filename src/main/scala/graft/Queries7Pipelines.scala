@@ -6,22 +6,19 @@ import org.apache.spark.sql.functions._
 import graft.operators.{AsOfMatch, Sessionize, TextAnalysis}
 
 /** Registry slice 7 (round 13, continued): behavioural-log pipeline
-  * operators — native session-window sessionization (batch + the
-  * streaming leg sharing one expression), the session funnel card, and
-  * the general payload-carrying as-of join. */
+  * operators — native session-window sessionization, the session
+  * funnel card, and the general payload-carrying as-of join. */
 private[graft] trait Queries7Pipelines extends Queries6Scale {
 
   // ---------------------------------------------------------------------
   // q157 — gap-based sessionization via Spark's NATIVE session_window
   // aggregation (operators/Sessionize): one exchange on user_id, a
   // partition-local sort+merge builds the sessions — no lag/flag/
-  // running-sum window chain, and the identical expression runs under
-  // Structured Streaming (streaming/StreamSessionize, batch-equivalence
-  // pinned). Oracle: the classic gap-and-islands SQL (break when the
-  // gap STRICTLY exceeds 1800 s — session_window merges at exact
-  // equality, pinned by SessionizeSpec; a >= break would agree on this
-  // data but diverge on any gap of exactly 1800.000000 s) — the two
-  // formulations agreeing IS the semantics certificate.
+  // running-sum window chain. Oracle: the classic gap-and-islands SQL
+  // (break when the gap STRICTLY exceeds 1800 s — session_window merges
+  // at exact equality, pinned by SessionizeSpec; a >= break would agree
+  // on this data but diverge on any gap of exactly 1800.000000 s) — the
+  // two formulations agreeing IS the semantics certificate.
   // ---------------------------------------------------------------------
   private[graft] def q157Sessionize(spark: SparkSession, dir: String): DataFrame =
     Sessionize.sessions(Tables.events(spark, dir), Seq("user_id"), "ts",

@@ -152,14 +152,6 @@ object VectorFunctions {
   def subvector_l2(a: Column, b: Column, offset: Int): Column =
     Bridge.column(SubvectorL2(Bridge.expression(a), Bridge.expression(b), offset))
 
-  /** Sign-bit LSH bucket from the first `bits` dimensions — the coarse
-    * quantizer for bucketed ANN (hyperplane LSH with axis-aligned planes).
-    * Deterministic and exactly reproducible in SQL. */
-  def signBucket(e: Column, bits: Int = 6): Column =
-    (0 until bits).map(i =>
-      when(element_at(e, i + 1) > lit(0f), lit(1L << i)).otherwise(lit(0L)))
-      .reduce(_ + _)
-
   /** Fixed random hyperplanes for sign-LSH over up to 64-dim embeddings:
     * small INTEGER-VALUED coefficients, so every product float×coeff is an
     * exact double and the left-to-right dot accumulation is bit-identical

@@ -121,27 +121,6 @@ object Classifier {
     LogRegModel(w, buckets)
   }
 
-  /** Persist the model as a parquet artifact (weight-index rows) — how
-    * a trained gate ships to a 1000-executor scoring job (a table, not
-    * a driver object; the q151/q171 artifact pattern). Bit-exact
-    * roundtrip: doubles store losslessly in parquet. */
-  def writeModel(spark: org.apache.spark.sql.SparkSession,
-                 model: LogRegModel, path: String): Unit = {
-    import spark.implicits._
-    model.weights.zipWithIndex.map { case (v, j) => (j, v) }.toSeq
-      .toDF("j", "w").repartition(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  def readModel(spark: org.apache.spark.sql.SparkSession,
-                path: String): LogRegModel = {
-    val rows = spark.read.parquet(path)
-      .collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1)
-    require(rows.nonEmpty && rows.map(_._1).toSeq == rows.indices,
-      s"malformed model artifact at $path")
-    LogRegModel(rows.map(_._2), rows.length - 1)
-  }
-
   /** Score with a trained (or frozen) model: (idCol..., p_scaled —
     * sigmoid in integer micro-units for stable downstream thresholds —
     * pred). */

@@ -42,9 +42,8 @@ object Importance {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
 
   /** The FROZEN scoring artifact: per-bucket log-likelihood ratios +
-    * the both-unseen default — what a production pipeline trains once
-    * batch-side and then applies to every later batch or stream
-    * ([[graft.streaming.StreamImportance]]). */
+    * the both-unseen default — trained once, then applied by
+    * [[scoreWith]] to every later batch as a stateless narrow fold. */
   case class RatioTable(ratio: Map[Long, Double], default: Double, buckets: Int)
 
   /** Train the ratio table: log((tgt[b]+1)/tgtTot) − log((raw[b]+1)/rawTot),

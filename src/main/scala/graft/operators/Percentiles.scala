@@ -32,10 +32,9 @@ object Percentiles {
   }
 
   /** The bucket-floored long value every histogram form uses — ONE
-    * definition so byRank, rollup, and the streaming partials
-    * ([[graft.streaming.StreamHist]]) cannot drift apart (their
+    * definition so byRank and rollup cannot drift apart (their
     * cross-certifying specs pin the equalities). */
-  private[graft] def bucketedValue(v: Column, bucket: Long): Column =
+  private def bucketedValue(v: Column, bucket: Long): Column =
     if (bucket <= 1L) v.cast("long")
     else (floor(v / bucket) * bucket).cast("long")
 
@@ -71,20 +70,6 @@ object Percentiles {
         rankSelect(col("__h"), floor((col("__n") - 1) * p) + 1).as(name)
       } :+ col("__n").as("n_rows")
     agged.select(outCols: _*)
-  }
-
-  /** Fold percentiles from an EXTERNAL (keyCol, __v, __cnt) histogram —
-    * the serving side of histogram-partial pipelines (the q179 rollup's
-    * store, [[graft.streaming.StreamHist]]'s merged window partials):
-    * percentiles on demand from accumulated partials, no source rescan.
-    * Exactness is inherited from the lossless histogram merge. */
-  def fromHistogram(hist: DataFrame, keyCol: String,
-                    ps: Seq[(String, Double)]): DataFrame = {
-    require(ps.nonEmpty && ps.forall { case (_, p) => p >= 0 && p < 1 },
-      "percentile fractions must be in [0, 1)")
-    require(Seq(keyCol, "__v", "__cnt").forall(hist.columns.contains),
-      s"histogram must carry ($keyCol, __v, __cnt); got ${hist.columns.mkString(",")}")
-    foldHist(hist, col(keyCol), keyCol, ps)
   }
 
   /** Two-level percentiles from ONE corpus scan — the mergeable-partial

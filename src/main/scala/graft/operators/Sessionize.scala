@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
   * exchange on the partition keys), not a hand-rolled
   * lag/flag/running-sum window chain. The native operator is the one
   * that also runs under Structured Streaming with watermark-driven state
-  * eviction, so the SAME expression serves the batch query and the
-  * streaming leg (`graft.streaming.StreamSessionize`) — declaring the
-  * session in the plan is exactly the "let Catalyst pick the physical
-  * strategy" bet this engine makes everywhere.
+  * eviction — declaring the session in the plan is exactly the "let
+  * Catalyst pick the physical strategy" bet this engine makes
+  * everywhere.
   *
   * Scale (100 TB): one exchange keyed by `keyCols` (NOT by session —
   * sessions of one key are computed by a partition-local sort+merge), so
@@ -26,16 +25,17 @@ import org.apache.spark.sql.functions._
   * bot with 10⁸ events) lands on one task. The mitigation is upstream
   * and semantic — split such keys by calendar day before sessionizing
   * (a key that hot has no meaningful cross-day sessions) — not a salt,
-  * which would break gap merging across the salt boundary. State in the
-  * streaming leg is bounded by the watermark: a session closes (and its
-  * state evicts) once the watermark passes `last_ts + gap`.
+  * which would break gap merging across the salt boundary. Under
+  * Structured Streaming, state is bounded by the watermark: a session
+  * closes (and its state evicts) once the watermark passes
+  * `last_ts + gap`.
   *
   * Merge semantics (pinned by SessionizeSpec and the DuckDB oracle):
   * an event at `t` extends a session whose current end
   * (`prev_ts + gap`) is AT LEAST `t` — a gap of exactly `gapSec`
   * still merges; only a strictly larger gap starts a new session.
   * `session_end` is `last_ts + gapSec` (the native window's close
-  * time, i.e. when the streaming leg would emit it).
+  * time, i.e. when a streaming run would emit it).
   */
 object Sessionize {
 

@@ -36,8 +36,7 @@ object TimeSeries {
       expr(s"CAST(${tsCol} AS LONG) DIV ${bucketSec}L").as("bucket_id"))
     // the axis law lives ONCE, in densify — every observed key and
     // bucket appears in the count frame, so densifying it is exactly
-    // the keys × [min, max] axis with zeros (StreamAnomalySpec's
-    // stream == batch equality leans on there being one definition)
+    // the keys × [min, max] axis with zeros
     densify(b.groupBy(col(keyCol), col("bucket_id"))
       .agg(count(lit(1)).as("n")), keyCol)
   }
@@ -170,12 +169,10 @@ object TimeSeries {
     anomalyFromSeries(gapFill(df, keyCol, tsCol, bucketSec), keyCol, sigmas)
 
   /** The stats + flag stage of [[anomalyBuckets]] over an ALREADY
-    * dense (keyCol, bucket_id, n_events) series — public so the
-    * streaming path serves the identical card: per-window bucket
-    * counts are ADDITIVE ([[graft.streaming.StreamHist]]'s law — a
-    * bucket count IS a 1-cell histogram), so merged streamed partials
-    * gap-fill batch-side into exactly this series and the anomaly
-    * answer equals batch (StreamAnomalySpec pins the equality). */
+    * dense (keyCol, bucket_id, n_events) series. Bucket counts are
+    * ADDITIVE (a bucket count is a 1-cell histogram), so partial counts
+    * from any slicing of the input, summed per (key, bucket) and
+    * gap-filled, give exactly this series and the batch answer. */
   def anomalyFromSeries(series: DataFrame, keyCol: String,
                         sigmas: Int = 3): DataFrame = {
     require(sigmas >= 1, s"sigmas must be >= 1, got $sigmas")
@@ -275,10 +272,9 @@ object TimeSeries {
   /** The lag + scoring stage of [[forecastBacktest]] over an ALREADY
     * dense (keyCol, bucket_id, n_events) series — public so streamed
     * partials serve the identical card: per-window (key, bucket) cent
-    * sums are ADDITIVE (the StreamHist law — a cent sum is a 1-cell
-    * weighted histogram), so merged streaming partials densify into
-    * exactly this series and the backtest equals batch
-    * (StreamForecastSpec pins the equality). */
+    * sums are ADDITIVE (a cent sum is a 1-cell weighted histogram), so
+    * merged streaming partials densify into exactly this series and the
+    * backtest equals batch (StreamForecastSpec pins the equality). */
   def backtestFromSeries(dense: DataFrame, keyCol: String,
                          season: Int): DataFrame = {
     require(season >= 2, s"season must be >= 2, got $season")

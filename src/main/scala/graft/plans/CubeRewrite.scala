@@ -101,8 +101,6 @@ object CubeRewrite extends Rule[LogicalPlan] {
     spec
   }
 
-  def clearCubes(): Unit = registry.clear()
-
   /** Incremental refresh for an APPEND-ONLY delta (the log-table case):
     * the delta is aggregated with the cube's own shape and merged by
     * the same laws routing uses — counts and sums add, min/max fold —

@@ -284,11 +284,15 @@ object WarcFiles {
       Some(out.toByteArray)
     } catch { case _: java.io.IOException => None }
 
-  /** The shared per-file decode map over binaryFile rows — one audit
-    * row per (path, content). Used by the batch reader below AND the
-    * streaming leg ([[graft.streaming.StreamWarc]]), so stream == batch
-    * by construction. Works unchanged on a streaming frame (narrow
-    * map, no aggregation).
+  /** The binaryFile source's per-file content ceiling: a content read
+    * past it throws, so both readers split on `length` first. */
+  private def binaryFileMaxLength(spark: SparkSession): Long =
+    spark.conf.get("spark.sql.sources.binaryFile.maxLength",
+      Int.MaxValue.toString).toLong
+
+  /** The per-file decode map over binaryFile rows — one audit row per
+    * (path, content) — behind [[readAudit]]. Narrow map, no
+    * aggregation.
     *
     * Decodes through the BYTE-domain walk ([[Warc.parseBytes]], r16):
     * real crawl payloads are UTF-8/binary and the previous whole-file
@@ -297,13 +301,7 @@ object WarcFiles {
     * the ASCII fixtures of [[writeArchiveDir]] (char encoder,
     * char-count lengths) byte and char counts coincide, so the q252
     * oracle arithmetic is unchanged. */
-  /** The binaryFile source's per-file content ceiling: a content read
-    * past it throws, so both readers split on `length` first. */
-  private def binaryFileMaxLength(spark: SparkSession): Long =
-    spark.conf.get("spark.sql.sources.binaryFile.maxLength",
-      Int.MaxValue.toString).toLong
-
-  private[graft] def auditColumns(bin: DataFrame): DataFrame = {
+  private def auditColumns(bin: DataFrame): DataFrame = {
     val spark = bin.sparkSession
     import spark.implicits._
     val maxLen = binaryFileMaxLength(spark)
@@ -389,7 +387,7 @@ object WarcFiles {
   /** Audit rows for oversized files via the stream walk — path listing
     * only reaches this lane, the content column is never requested from
     * binaryFile (whose read would throw past the ceiling). */
-  private[graft] def streamedAuditColumns(paths: DataFrame): DataFrame = {
+  private def streamedAuditColumns(paths: DataFrame): DataFrame = {
     val spark = paths.sparkSession
     import spark.implicits._
     paths.as[String].mapPartitions(_.map { path =>
@@ -407,7 +405,7 @@ object WarcFiles {
 
   /** Record rows for oversized files via the stream walk — the serving
     * sibling of [[streamedAuditColumns]]. */
-  private[graft] def streamedRecordColumns(paths: DataFrame): DataFrame = {
+  private def streamedRecordColumns(paths: DataFrame): DataFrame = {
     val spark = paths.sparkSession
     import spark.implicits._
     paths.as[String].mapPartitions(_.flatMap { path =>
@@ -426,7 +424,7 @@ object WarcFiles {
     * emitted (count-don't-crash — the file-grain audit carries the tear
     * flag), undecodable files emit nothing. Narrow partition-local
     * flatMap; payload bytes never shuffle. */
-  private[graft] def recordColumns(bin: DataFrame): DataFrame = {
+  private def recordColumns(bin: DataFrame): DataFrame = {
     val spark = bin.sparkSession
     import spark.implicits._
     // oversized files serve nothing (their audit row is the observable)
@@ -476,11 +474,9 @@ object WarcFiles {
       .option("pathGlobFilter", "*.warc*")
       .load(dir))
 
-  /** The shared per-file revisit map over binaryFile rows — used by the
-    * batch reader above AND the streaming leg
-    * ([[graft.streaming.StreamWarc.revisits]]), so stream == batch by
-    * construction. */
-  private[graft] def revisitColumns(bin: DataFrame): DataFrame = {
+  /** The per-file revisit map over binaryFile rows behind
+    * [[readRevisits]]. */
+  private def revisitColumns(bin: DataFrame): DataFrame = {
     val spark = bin.sparkSession
     import spark.implicits._
     bin.filter(col("length") <= binaryFileMaxLength(spark))

@@ -65,7 +65,6 @@ final class AdaptiveSampler(seed: Long = System.nanoTime(),
   }
 
   def currentMaskBits: Int = maskBits
-  def currentSampleRate: Double = 1.0 / (1L << maskBits)
 }
 
 object AdaptiveSampler {

@@ -59,19 +59,6 @@ class ClassifierSpec extends SparkSpec {
     assert(train(docs, parts = 1).toSeq == train(docs, parts = 7).toSeq)
   }
 
-  test("model artifact roundtrip is bit-exact") {
-    import spark.implicits._
-    val docs = corpus(100, seed = 3)
-    val model = Classifier.trainLogReg(docs.toDF("label", "text"),
-      "text", "label", buckets = Buckets, iters = 5, lr = Lr)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-logreg-model").toString
-    Classifier.writeModel(spark, model, dir)
-    val back = Classifier.readModel(spark, dir)
-    assert(back.buckets == model.buckets)
-    assert(back.weights.toSeq == model.weights.toSeq)
-  }
-
   test("learns a separable vocabulary") {
     import spark.implicits._
     val docs = corpus(400, seed = 11)

@@ -250,48 +250,6 @@ class SinksSpec extends SparkSpec {
     assert(dead.rows.map(_.getLong(0)).sorted == Seq(2L, 3L))
   }
 
-  test("compaction collapses per-batch partitions into few files, rows intact") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-compact")
-    val dir = s"$root/t"
-    val sink = new ParquetAppendSink(dir)
-    (0L until 6L).foreach { b =>
-      sink.write(Seq((b * 2, s"v$b"), (b * 2 + 1, s"w$b")).toDF("id", "v"), b)
-    }
-    def parquetFiles(p: String): Long = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try s.filter(f => f.toString.endsWith(".parquet")).count() finally s.close()
-    }
-    val before = parquetFiles(dir)
-    assert(before >= 6) // one+ file per batch partition
-    // compact only closed batches (0..4); batch 5 stays replayable
-    val out = s"$root/compacted"
-    val n = Compaction.compact(spark, dir, out, maxBatchId = 4L, targetFiles = 1)
-    assert(n == 10)
-    assert(parquetFiles(out) == 1)
-    val rows = spark.read.parquet(out).select("id").collect()
-      .map(_.getLong(0)).sorted.toSeq
-    assert(rows == (0L until 10L))
-    // lineage survives as a plain column
-    assert(spark.read.parquet(out).columns.contains("__batch_id"))
-  }
-
-  test("ClickHouse DDL derives from config: renames apply, drops vanish") {
-    import graft.config.GraftConfig
-    val cfg = GraftConfig.fromToml(
-      "[ClickHouse]\nQueryTable = \"q\"\nQueryAddressColumn = \"client\"\nQuestionTypeColumn = \"\"\n")
-    val ddl = ClickHouseDdl.queryTable(cfg)
-    assert(ddl.startsWith("CREATE TABLE q (") )
-    assert(ddl.contains("client String"))
-    assert(!ddl.contains("questionType"))
-    assert(ddl.contains("counter UInt64"))
-    // sample table follows the quickstart's LowCardinality identity
-    val sample = ClickHouseDdl.sampleTable(GraftConfig.defaults)
-    assert(sample.contains("identity LowCardinality(String)"))
-    assert(sample.contains("queryResponseTimeDelta UInt64"))
-    assert(ClickHouseDdl.all(GraftConfig.defaults).size == 3)
-  }
-
   test("column projection renames and drops; identity passes through") {
     import spark.implicits._
     val df = Seq((1L, "x", 2L)).toDF("a", "b", "c")

@@ -139,6 +139,48 @@ class FrameSocketServerSpec extends AnyFunSuite {
       conn.close()
     } finally server.close()
   }
+
+  test("a truncated READY handshake gets no ACCEPT and frees the reader for the next peer") {
+    val sock = Files.createTempDirectory("graft-trunc").resolve("d.sock").toString
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Byte]]()
+    // one reader and no read deadline: only the reader's own EOF handling
+    // can free it for the second peer
+    val server = new FrameSocketServer(sock, readers = 1,
+      maxFrameBytes = FrameStreams.DefaultMaxFrameBytes,
+      emit = f => got.add(f.toSeq))
+    server.start()
+    try {
+      server.awaitBound()
+      // peer 1: a READY control frame whose length header claims 4 bytes
+      // more than the peer sends, then end of stream
+      val ready = new ByteArrayOutputStream()
+      FrameStreams.writeControlFrame(ready, FrameStreams.ControlReady,
+        Seq(FrameStreams.ContentTypeDnstap))
+      val truncated = ready.toByteArray.dropRight(4)
+      val p1 = SocketChannel.open(UnixDomainSocketAddress.of(sock))
+      val p1Out = Channels.newOutputStream(p1)
+      p1Out.write(truncated); p1Out.flush()
+      p1.shutdownOutput()
+
+      val p2 = SocketChannel.open(UnixDomainSocketAddress.of(sock))
+      val p2Out = Channels.newOutputStream(p2)
+      FrameStreams.writeControlFrame(p2Out, FrameStreams.ControlStart,
+        Seq(FrameStreams.ContentTypeDnstap))
+      FrameStreams.writeDataFrame(p2Out, Array[Byte](7))
+      FrameStreams.writeDataFrame(p2Out, Array[Byte](8, 9))
+      FrameStreams.writeControlFrame(p2Out, FrameStreams.ControlStop)
+
+      val deadline = System.nanoTime() + 15L * 1000000000L
+      while (got.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      // peer 2's frames, and nothing for peer 1
+      import scala.jdk.CollectionConverters._
+      assert(got.asScala.toSeq == Seq(Seq[Byte](7), Seq[Byte](8, 9)))
+      // the reader closed peer 1 before it took peer 2, having written
+      // nothing back: its first read is end of stream, not an ACCEPT
+      assert(Channels.newInputStream(p1).read() == -1)
+      p1.close(); p2.close()
+    } finally server.close()
+  }
 }
 
 class DnstapSocketSourceSpec extends SparkSpec {

@@ -1,12 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.api.java.Optional
-import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, TestGroupState}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.streaming.LatencyMatcher._
 
-class LatencyMatcherSpec extends AnyFunSuite {
+class LatencyMatcherSpec extends SparkSpec {
   private val key = MatchKey("ns1", "10.0.0.1", 4242, 7)
   private def ev(us: Long, resp: Boolean) =
     MatchEvent(key.identity, key.queryAddress, key.queryPort, key.id, us, resp)
@@ -66,6 +68,52 @@ class LatencyMatcherSpec extends AnyFunSuite {
     val st = freshState()
     fn(key, Iterator(ev(1000000, resp = false)), st).toSeq
     assert(st.getTimeoutTimestampMs.isPresent)
+  }
+
+  /** Poll lastProgress until the summed state-store row count satisfies
+    * `want` (the async listener bus is avoided on purpose — lastProgress
+    * is written synchronously by the stream-execution thread). Returns
+    * the maximum row count OBSERVED while waiting, so callers can also
+    * assert the bound was never exceeded in between. */
+  private def awaitState(q: StreamingQuery, deadlineSec: Int = 90)
+                        (want: Long => Boolean): Long = {
+    val deadline = System.nanoTime() + deadlineSec * 1000000000L
+    var maxSeen = -1L
+    var last = -1L
+    while (System.nanoTime() < deadline) {
+      q.exception.foreach(e => throw e)
+      val p = q.lastProgress
+      if (p != null && p.stateOperators.nonEmpty) {
+        last = p.stateOperators.map(_.numRowsTotal).sum
+        maxSeen = math.max(maxSeen, last)
+        if (want(last)) return maxSeen
+      }
+      Thread.sleep(50)
+    }
+    fail(s"state row count never satisfied the bound; last=$last max=$maxSeen")
+  }
+
+  test("LatencyMatcher state rows == live unmatched keys, 0 after matching") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val mem = MemoryStream[LatencyMatcher.MatchEvent]
+    val out = LatencyMatcher.samples(spark, mem.toDS(), ttlMs = 600000L)
+    val query = out.writeStream.format("memory").queryName("sb_match")
+      .outputMode("append").start()
+    try {
+      // 20 unmatched queries on 20 distinct keys -> exactly 20 state rows
+      mem.addData((1 to 20).map(i => LatencyMatcher.MatchEvent(
+        "ns1", "10.0.0.1", 1000 + i, i, 1000000L * i, isResponse = false)))
+      awaitState(query)(_ == 20L)
+      // their 20 responses: every match consumes its row -> 0 state rows
+      mem.addData((1 to 20).map(i => LatencyMatcher.MatchEvent(
+        "ns1", "10.0.0.1", 1000 + i, i, 1000000L * i + 500000L,
+        isResponse = true)))
+      val maxSeen = awaitState(query)(_ == 0L)
+      assert(maxSeen <= 20L, s"state exceeded the unmatched-key bound: $maxSeen")
+      val n = spark.sql("SELECT * FROM sb_match").count()
+      assert(n == 20L)
+    } finally query.stop()
   }
 }
 
