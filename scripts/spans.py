@@ -1,18 +1,27 @@
 #!/usr/bin/env python3
-"""Print each micro-batch's timeline from a traced perfbench run.
+"""Print each micro-batch's or registry query's timeline from a traced perfbench run.
 
     python3 scripts/spans.py [SPANS]
 
 SPANS is a `spans.jsonl` written by `perfbench/run.py --trace 1`, or the
 run's directory under `.bench_traces/`; without it the newest
-`.bench_traces/*/spans.jsonl` is read. For every micro-batch span it prints,
-in milliseconds from the batch's start, the batch's `durationMs` parts
-(laid end to end in the order Spark runs them, see PARTS), the sink writes
-and the Spark jobs that hang under it. The summary gives, per streaming
-query, the number of batches, the jobs per batch, the median trigger and
-sink-write times, how long the batch's top-level sink writes ran at once,
-and the gap from the start of `addBatch` to the first sink write. It reads
-only; nothing is written.
+`.bench_traces/*/spans.jsonl` is read.
+
+An `ingest_agg` trace holds micro-batch spans. For every one it prints, in
+milliseconds from the batch's start, the batch's `durationMs` parts (laid
+end to end in the order Spark runs them, see PARTS), the sink writes and the
+Spark jobs that hang under it. The summary gives, per streaming query, the
+number of batches, the jobs per batch, the median trigger and sink-write
+times, how long the batch's top-level sink writes ran at once, and the gap
+from the start of `addBatch` to the first sink write.
+
+A `dns_analytics` trace holds one `query:<name>` span per query execution.
+For every one it prints, in milliseconds from the execution's start, the
+time to its first Spark job, each job, and the gaps between jobs. The
+summary gives, per query, the number of executions, the median time to the
+first job, the jobs per execution, the median job time, the median gap
+between jobs and the median time from the last job's end to the execution's
+end. It reads only; nothing is written.
 """
 import argparse
 import collections
@@ -80,21 +89,7 @@ def p50(xs):
     return statistics.median(xs) if xs else 0.0
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("spans", nargs="?", help="spans.jsonl or its trace directory")
-    args = ap.parse_args()
-
-    path = spans_path(args.spans)
-    spans = load(path)
-    children = collections.defaultdict(list)
-    for s in spans:
-        if s["parent"]:
-            children[s["parent"]].append(s)
-    batches = [s for s in spans if s["name"].startswith("batch:")]
-    batches.sort(key=lambda s: s["start_ns"])
-    print(f"# {os.path.relpath(path)}: {len(batches)} batches")
-
+def batch_report(batches, children):
     per_query = collections.defaultdict(lambda: collections.defaultdict(list))
     for b in batches:
         query = b["name"][len("batch:"):]
@@ -128,6 +123,60 @@ def main():
               f"sink writes first start .. last end p50 {p50(st['write_ms']):.0f} ms; "
               f"writes running at once p50 {p50(st['overlap_ms']):.0f} ms; "
               f"addBatch start .. first sink write p50 {p50(st['gap_ms']):.0f} ms")
+
+
+def query_report(executions, children):
+    """Per registry query execution: time to the first job, each job, the gaps."""
+    per_query = collections.defaultdict(lambda: collections.defaultdict(list))
+    for q in executions:
+        name = q["name"][len("query:"):]
+        jobs = sorted((k for k in children[q["id"]] if k["name"].startswith("job:")),
+                      key=lambda s: s["start_ns"])
+        stats = per_query[name]
+        stats["jobs"].append(len(jobs))
+        stats["wall_ms"].append(ms(q["end_ns"] - q["start_ns"]))
+        print(f"\n{q['id']}  {ms(q['end_ns'] - q['start_ns']):.0f} ms, {len(jobs)} jobs")
+        t = q["start_ns"]
+        for i, j in enumerate(jobs):
+            gap = ms(j["start_ns"] - t)
+            (stats["first_job_ms"] if i == 0 else stats["gap_ms"]).append(gap)
+            stats["job_ms"].append(ms(j["end_ns"] - j["start_ns"]))
+            label = "to first job" if i == 0 else "gap"
+            print(f"  {label:<14} {gap:8.1f} ms")
+            start, end = ms(j["start_ns"] - q["start_ns"]), ms(j["end_ns"] - q["start_ns"])
+            print(f"  {j['name']:<14} {start:8.1f} .. {end:8.1f}  ({end - start:7.1f} ms)")
+            t = max(t, j["end_ns"])
+        stats["tail_ms"].append(ms(q["end_ns"] - t))
+        print(f"  {'to end':<14} {ms(q['end_ns'] - t):8.1f} ms")
+
+    print("\n# summary")
+    for name, st in sorted(per_query.items()):
+        jobs = st["jobs"]
+        print(f"{name}: {len(jobs)} executions; wall p50 {p50(st['wall_ms']):.0f} ms; "
+              f"to first job p50 {p50(st['first_job_ms']):.1f} ms; "
+              f"jobs per execution median {p50(jobs):g} (min {min(jobs)}, max {max(jobs)}); "
+              f"job p50 {p50(st['job_ms']):.1f} ms; gap between jobs p50 {p50(st['gap_ms']):.1f} ms; "
+              f"last job end .. end p50 {p50(st['tail_ms']):.1f} ms")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("spans", nargs="?", help="spans.jsonl or its trace directory")
+    args = ap.parse_args()
+
+    path = spans_path(args.spans)
+    spans = load(path)
+    children = collections.defaultdict(list)
+    for s in spans:
+        if s["parent"]:
+            children[s["parent"]].append(s)
+    batches = sorted((s for s in spans if s["name"].startswith("batch:")), key=lambda s: s["start_ns"])
+    executions = sorted((s for s in spans if s["name"].startswith("query:")), key=lambda s: s["start_ns"])
+    print(f"# {os.path.relpath(path)}: {len(batches)} batches, {len(executions)} query executions")
+    if batches:
+        batch_report(batches, children)
+    if executions:
+        query_report(executions, children)
 
 
 if __name__ == "__main__":

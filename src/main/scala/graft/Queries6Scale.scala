@@ -377,8 +377,7 @@ private[graft] trait Queries6Scale extends Queries5Tokenizer {
   // fixed-point iteration in pure 64-bit integers that BOTH engines
   // replay bit-identically (the oracle's recursive CTE runs the same
   // iteration; md5 bucketing replaces xxhash64 for the same reason).
-  // The float path (StrictMath table, Importance.dsirSelect) stays,
-  // pinned by ImportanceSpec against an in-memory reference.
+  // This integer path is Importance's only DSIR scorer.
   // ---------------------------------------------------------------------
   private[graft] def q147DsirSelect(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)

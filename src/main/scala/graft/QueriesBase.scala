@@ -34,22 +34,6 @@ private[graft] trait QueriesBase {
     dir.toString
   }
 
-  /** Staleness fingerprint of a source table's on-disk files: sorted
-    * (name, length, mtime) of every file under the path (or the file
-    * itself), hashed. Changes whenever the data does; driver-side
-    * listing only, never a read of the data. */
-  private[graft] def sourceFingerprint(path: String): String = {
-    val f = new java.io.File(path)
-    val entries =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten.sortBy(_.getName)
-          .map(x => s"${x.getName}:${x.length}:${x.lastModified}")
-      else Seq(s"${f.getName}:${f.length}:${f.lastModified}")
-    val all = (f.getAbsolutePath +: entries).mkString("\n")
-    String.format("%08x",
-      Int.box(scala.util.hashing.MurmurHash3.stringHash(all)))
-  }
-
   /** Disk-backed artifact cache (r17, VERDICT #7): build once, serve
     * across JVMs — the q151/q182 index-as-artifact discipline applied
     * to the memoized closure family, which a per-JVM temp dir forced
@@ -76,7 +60,7 @@ private[graft] trait QueriesBase {
     val root = sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_DIR",
       System.getProperty("java.io.tmpdir") + "/graft_artifacts")
     val key = s"v$version-" +
-      sourceFingerprint(s"$sourceDir/$sourceTable.parquet")
+      Tables.sourceFingerprint(s"$sourceDir/$sourceTable.parquet")
     val srcScope = "src-" + String.format("%08x",
       Int.box(scala.util.hashing.MurmurHash3.stringHash(
         new java.io.File(sourceDir).getAbsolutePath)))

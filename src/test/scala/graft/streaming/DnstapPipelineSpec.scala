@@ -291,6 +291,83 @@ class DnstapPipelineSpec extends SparkSpec {
     assert(names(s"$ckpt/agg/commits") == layout)
   }
 
+  test("a query sink that never succeeds fails W1 after its retries, commits nothing, and a restart delivers the batch once") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val root = Files.createTempDirectory("graft-dead-sink-spec")
+    val (ckpt, out) = (s"$root/ckpt", s"$root/out")
+    val cfg = DnstapPipeline.Config(clientResponseTimeSamples = false)
+    val mem = MemoryStream[Array[Byte]]
+    def start(sinks: DnstapPipeline.Sinks): StreamingQuery = {
+      val Seq(q) = DnstapPipeline.start(spark, mem.toDS(), cfg, sinks, ckpt, instantTriggers = true)
+      q
+    }
+    def names(dir: String): Seq[String] = {
+      val s = Files.list(Paths.get(dir))
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+    }
+    val parquet = new ParquetAppendSink(s"$out/q")
+
+    // first run: every query write lands part of the batch and throws,
+    // while the response leg writes until it is stopped
+    val responseEntered = new CountDownLatch(1)
+    @volatile var responseInterrupted = false
+    @volatile var responseEnded = false
+    val attempts = new AtomicInteger()
+    val neverSucceeds = new BatchSink {
+      override def write(df: DataFrame, batchId: Long): Unit = {
+        responseEntered.await(30, TimeUnit.SECONDS) // fail while the response leg writes
+        attempts.incrementAndGet()
+        parquet.write(df.limit(2), batchId)
+        throw new RuntimeException("query store down")
+      }
+    }
+    val slowResponses = new BatchSink {
+      override def write(df: DataFrame, batchId: Long): Unit = {
+        responseEntered.countDown()
+        try Thread.sleep(120000)
+        catch { case e: InterruptedException => responseInterrupted = true; throw e }
+        finally responseEnded = true
+      }
+    }
+    val first = start(DnstapPipeline.Sinks(new RetryingSink(neverSucceeds, maxAttempts = 3, sleep = _ => ()),
+      slowResponses, new CollectingSink()))
+    try {
+      mem.addData(frames)
+      val e = intercept[StreamingQueryException](first.awaitTermination(60000))
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(_.getMessage == "query store down"), e.toString)
+      assert(attempts.get == 3)
+      assert(responseInterrupted, "the response leg was not interrupted")
+      assert(responseEnded, "the response leg outlived the failed batch")
+    } finally first.stop()
+    assert(names(s"$ckpt/agg/offsets").contains("0"))
+    assert(!Files.exists(Paths.get(s"$ckpt/agg/commits/0")), "the failed batch was committed")
+    assert(names(s"$out/q") == Seq("__batch_id=0"))
+
+    // restart over the same checkpoint with healthy sinks
+    val written = new ConcurrentLinkedQueue[Long]()
+    val second = start(DnstapPipeline.Sinks(
+      new RetryingSink(new BatchSink {
+        override def write(df: DataFrame, batchId: Long): Unit = {
+          written.add(batchId)
+          parquet.write(df, batchId)
+        }
+      }, maxAttempts = 3, sleep = _ => ()),
+      new ParquetAppendSink(s"$out/r"), new CollectingSink()))
+    try second.processAllAvailable() finally second.stop()
+    assert(written.asScala.toSeq == Seq(0L))
+    assert(names(s"$ckpt/agg/commits").contains("0"))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    Seq("q", "r").foreach(t => assert(names(s"$out/$t") == Seq("__batch_id=0"), t))
+    assert(rows(spark.read.parquet(s"$out/q/__batch_id=0")) ==
+      rows(DnstapPipeline.aggregateQueries(DnstapPipeline.queryRows(frames.toDS()), cfg)))
+    val responses = spark.read.parquet(s"$out/r/__batch_id=0").collect()
+    assert(responses.map(r => (r.getAs[String]("responseStatus"), r.getAs[String]("questionName"),
+      r.getAs[Long]("counter"))).toSet ==
+      Set(("NXDOMAIN", "a.example.", 1L), ("NXDOMAIN", "__ANY__", 1L)) && responses.length == 3)
+  }
+
   /** Records each write's batch id, the writing thread and the
     * `streaming.sql.batchId` local property that thread carries. */
   private final class ThreadRecordingSink(inner: BatchSink) extends BatchSink {
