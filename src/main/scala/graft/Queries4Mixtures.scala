@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import graft.codec.{DnsWire, DnstapCodec}
 import graft.dns.{DnsAnalog, DnstapRows}
 import graft.functions.{Anonymize, DnsNames, IpFunctions, VectorFunctions}
-import graft.operators.{AsOfMatch, CorpusStats, Dedup, GroupingSetCounter, MediaCodec, Multimodal, NgramModel, Packing, Percentiles, Quantize, Sampling, Scrub, Similarity, SkewAgg, TextAnalysis}
+import graft.operators.{AsOfMatch, CorpusStats, Dedup, GroupingSetCounter, MediaCodec, Multimodal, NgramModel, Packing, Percentiles, Quantize, Sampling, Scrub, ShingleIndex, Similarity, SkewAgg, TextAnalysis}
 
 /** Mixture, quality and real-media families (q79-q103): cluster mixes, hard negatives, BPE pair stats, cross-modal manifests, leakage, zipf, novelty, PNG/JPEG/WAV codecs, BoW quality.
   *
@@ -516,19 +516,13 @@ private[graft] trait Queries4Mixtures extends Queries3Curation {
   // ---------------------------------------------------------------------
   private[graft] def q95Novelty(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // identity-only shingle hash (r19, the ngramJaccardPairs swap):
-    // the oracle groups by shingle TEXT
-    val sh = docs
-      .select(col("doc_id"),
-        TextAnalysis.tokenHashes(TextAnalysis.tokens(col("text"))).as("__th"))
-      .select(col("doc_id"),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), 3)).as("h"))
-      .distinct()
-    val dfreq = sh.groupBy(col("h")).agg(count(lit(1)).as("__df"))
-    sh.join(dfreq, "h")
+    // the oracle groups by shingle TEXT; ShingleIndex's hash identity
+    // stands in for it
+    val sh = ShingleIndex.build(docs, Seq(col("doc_id")), col("text"), 3)
+    sh.join(ShingleIndex.docFreq(sh), "h")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
-        sum(when(col("__df") === 1, 1L).otherwise(0L)).as("n_unique"))
+        sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_unique"))
       .select(col("doc_id"), col("n_shingles"), col("n_unique"),
         floor(col("n_unique") * 10000 / col("n_shingles")).cast("long")
           .as("novelty_bp"))

@@ -220,19 +220,13 @@ object CorpusStats {
     * cost is sources², never |docs|². */
   def sourceOverlap(df: DataFrame, textCol: String, srcCol: String,
                     n: Int = 5): DataFrame = {
-    // identity-only shingle hash (r19, the ngramJaccardPairs swap)
-    val sh = df
-      .select(col(srcCol).as("__src"),
-        TextAnalysis.tokenHashes(TextAnalysis.tokens(col(textCol))).as("__th"))
-      .select(col("__src"),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("__h"))
-      .distinct()
+    val sh = ShingleIndex.build(df, Seq(col(srcCol).as("__src")), col(textCol), n)
     // sorted source set per shingle → (a, b) pairs with a < b by position
     val pairs = flatten(transform(col("__ss"), (x, i) =>
       transform(slice(col("__ss"), i + lit(2),
           greatest(size(col("__ss")) - i - 1, lit(0))),
         y => struct(x.as("a"), y.as("b")))))
-    sh.groupBy(col("__h"))
+    sh.groupBy(col("h"))
       .agg(sort_array(collect_set(col("__src"))).as("__ss"))
       .filter(size(col("__ss")) >= 2)
       .select(explode(pairs).as("__p"))

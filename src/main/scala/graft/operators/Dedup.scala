@@ -38,42 +38,10 @@ object Dedup {
     *        stale. (Construction DOES run jobs either way — the index is
     *        eagerly checkpointed, see the body comment.)
     */
-  /** The viral-hash set of a shingle index: hashes whose document
-    * frequency within `counted` exceeds the cap (absolute `maxDf`, or
-    * `maxDfFrac` of the 1-row `nDocs` count aliased `__n`, which rides
-    * the plan broadcast so the threshold scales with the data). ONE hash
-    * aggregation with map-side combine — a viral hash never lands in one
-    * task the way a count-over-window would route it. The result is NOT
-    * hint-broadcast: bounded for sane caps, but an adversarial cap
-    * (df 1) makes it large, and an AQE shuffle anti-join degrades, never
-    * OOMs. Callers LEFT-ANTI join it off their index — off BOTH sides of
-    * a two-sided universe (the one-universe rule). Shared by the Jaccard
-    * pair family and `Scrub.fuzzyDecontaminate` so the threshold
-    * semantics (`>`, ceil) cannot drift between them. */
-  private[operators] def viralHashes(counted: DataFrame, hashCol: String,
-                                     nDocs: Option[DataFrame], maxDf: Long,
-                                     maxDfFrac: Double): DataFrame = {
-    val dfreq = counted.groupBy(col(hashCol)).agg(count(lit(1)).as("__df"))
-    val viral =
-      if (maxDfFrac > 0)
-        dfreq.crossJoin(broadcast(nDocs.getOrElse(sys.error(
-            "viralHashes: fractional cap needs the corpus count"))))
-          .filter(col("__df") > ceil(col("__n") * maxDfFrac))
-      else dfreq.filter(col("__df") > maxDf)
-    viral.select(col(hashCol))
-  }
-
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, threshold: Double = 0.5,
                         maxShingleDf: Long = 0L,
                         maxShingleDfFrac: Double = 0.0): DataFrame = {
-    // 64-bit shingle hashes, not shingle strings, flow through the joins
-    // (collision probability ~n²/2^65 — negligible at any corpus size).
-    // NOTE (measured at sf0.1, round 5): a "narrow" variant that
-    // per-doc-dedups with array_distinct(transform(..xxhash64..)) before
-    // the explode — saving the distinct shuffle — benched 3.4× SLOWER:
-    // projection collapse re-evaluates the shingle array per consumer.
-    // Keep the explode + distinct form.
     // Materialize the index ONCE: it feeds four plan consumers (the df
     // cap, sizes, and both sides of the candidate self-join), and Spark
     // duplicates the subtree per consumer — measured at sf0.001 the
@@ -82,19 +50,8 @@ object Dedup {
     // shuffle stage exists to reuse). Only fixed-width (doc, h) rows are
     // stored, never shingle text; construction runs the one job (same
     // eager-localCheckpoint trade as connectedComponents).
-    // identity-only shingle hash (r19, guide §1.2): the oracle joins on
-    // shingle TEXT, so one xxhash64 over the n token hashes replaces
-    // hashing each built shingle string — no per-window string
-    // allocation, each token's bytes hashed once, not n times
-    val sh0 = df
-      .select(col(idCol).as("doc"),
-        TextAnalysis.tokenHashes(TextAnalysis.tokens(col(textCol))).as("__th"))
-      .select(col("doc"),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("h"))
-      .distinct()
+    val sh0 = ShingleIndex.build(df, Seq(col(idCol).as("doc")), col(textCol), n)
       .localCheckpoint()
-    // df cap: the shared viralHashes aggregation + anti-join (see its
-    // scaladoc for the map-side-combine / no-hint-broadcast rationale)
     val sh =
       if (maxShingleDf <= 0 && maxShingleDfFrac <= 0) sh0
       else {
@@ -102,26 +59,10 @@ object Dedup {
           if (maxShingleDfFrac > 0)
             Some(df.agg(countDistinct(col(idCol)).as("__n")))
           else None
-        sh0.join(viralHashes(sh0, "h", nDocs, maxShingleDf, maxShingleDfFrac),
-            Seq("h"), "left_anti")
+        ShingleIndex.capped(sh0, sh0, nDocs, maxShingleDf, maxShingleDfFrac)
           .localCheckpoint()
       }
-    // carry each doc's shingle-set size into the index so the exact
-    // size-ratio bound (jaccard >= t ⇒ min(sz) >= t*max(sz)) prunes pairs
-    // inside the join itself, before any pair reaches the aggregation
-    val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
-    val idx = sh.join(sizes, "doc")
-    idx.as("a")
-      .join(idx.as("b"),
-        col("a.h") === col("b.h") && col("a.doc") < col("b.doc") &&
-          least(col("a.sz"), col("b.sz")) >=
-            lit(threshold) * greatest(col("a.sz"), col("b.sz")))
-      .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-        col("a.sz").as("sza"), col("b.sz").as("szb"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("c") * lit(1.0) / (col("sza") + col("szb") - col("c"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardPairsWithinIndex(ShingleIndex.withSizes(sh, Seq("doc")), threshold)
   }
 
   /** Near-duplicate pairs of a NEW batch against an EXISTING corpus —
@@ -169,14 +110,6 @@ object Dedup {
                               maxShingleDfFrac: Double = 0.0,
                               bloomFpp: Double = 0.0,
                               maxBloomItems: Long = 1L << 26): DataFrame = {
-    // identity-only shingle hash — same swap as ngramJaccardPairs (r19)
-    def shingles(df: DataFrame, side: String): DataFrame = df
-      .select(col(idCol).as("doc"),
-        TextAnalysis.tokenHashes(TextAnalysis.tokens(col(textCol))).as("__th"))
-      .select(col("doc"),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("h"))
-      .select(lit(side).as("side"), col("doc"), col("h"))
-      .distinct()
     // The index feeds FOUR plan consumers (the df cap, sizes, and both
     // candidate-join inputs); Spark duplicates the subtree per consumer —
     // measured at sf0.1, the tokenize/explode/distinct pipeline executed
@@ -186,21 +119,20 @@ object Dedup {
     // connectedComponents (construction runs a job; blocks are lost with
     // an executor, acceptable for a batch operator, and only fixed-width
     // (side, doc, h) rows are stored, never text).
-    val u0 = shingles(batch, "b").union(shingles(corpus, "c")).localCheckpoint()
-    // corpus-df cap: the shared viralHashes aggregation + anti-join,
-    // counting the CORPUS side only; a capped shingle leaves BOTH sides
-    // (one-universe rule)
+    def side(df: DataFrame, s: String): DataFrame = ShingleIndex.build(df,
+      Seq(lit(s).as("side"), col(idCol).as("doc")), col(textCol), n)
+    val u0 = side(batch, "b").union(side(corpus, "c")).localCheckpoint()
+    // corpus-df cap counting the CORPUS side only; a capped shingle
+    // leaves BOTH sides (one-universe rule)
     val uc =
       if (maxShingleDfFrac <= 0) u0
       else {
         val nCorpus = corpus.agg(countDistinct(col(idCol)).as("__n"))
-        u0.join(viralHashes(u0.filter(col("side") === "c"), "h",
-            Some(nCorpus), 0L, maxShingleDfFrac), Seq("h"), "left_anti")
-          .localCheckpoint()
+        ShingleIndex.capped(u0, u0.filter(col("side") === "c"),
+          Some(nCorpus), 0L, maxShingleDfFrac).localCheckpoint()
       }
     // sizes AFTER the cap: jaccard is computed over the capped universe
-    val sizes = uc.groupBy(col("side"), col("doc")).agg(count(lit(1)).as("sz"))
-    val idx = uc.join(sizes, Seq("side", "doc"))
+    val idx = ShingleIndex.withSizes(uc, Seq("side", "doc"))
     // runtime semi-join reduction of the (big) corpus side — see the
     // @param bloomFpp contract. Sizes above came from the UNpruned index,
     // so denominators are exact; the probe expression is codegen'd
@@ -220,24 +152,15 @@ object Dedup {
         }
       }
     }
-    idx.filter(col("side") === "b").as("b")
-      .join(corpusIdx.as("c"),
-        col("b.h") === col("c.h") &&
-          least(col("b.sz"), col("c.sz")) >=
-            lit(threshold) * greatest(col("b.sz"), col("c.sz")))
-      .groupBy(col("b.doc").as("batch_doc"), col("c.doc").as("corpus_doc"),
-        col("b.sz").as("szb"), col("c.sz").as("szc"))
-      .agg(count(lit(1)).as("__c"))
-      .select(col("batch_doc"), col("corpus_doc"),
-        (col("__c") * lit(1.0) / (col("szb") + col("szc") - col("__c")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardPairsAgainstIndex(corpusIdx, idx.filter(col("side") === "b"),
+      threshold)
   }
 
   // -------------------------------------------------------------------
   // MinHash + LSH and SimHash — the sketch-based scale paths. Both build
-  // on a 32-bit base hash chosen to be reproducible in any SQL dialect
-  // (oracle parity): the first 8 hex chars of md5, read as an integer.
+  // on md5-derived base hashes chosen to be reproducible in any SQL
+  // dialect (oracle parity): leading hex chars of md5, read as an
+  // integer (60 bits for MinHash, two 32-bit halves for SimHash).
   // -------------------------------------------------------------------
 
   /** Dialect-portable 32-bit content hash. */
@@ -264,7 +187,8 @@ object Dedup {
   }
 
   /** Near-duplicate pairs via MinHash signatures + banded LSH:
-    * shingle → 32-bit hash → k permutation-min signature → band buckets →
+    * shingle → 60-bit hash ([[baseHash60]]) → k permutation-min
+    * signature → band buckets →
     * candidate pairs where any band collides → exact Jaccard verify.
     *
     * Scale: the signature is one hash-aggregate over the inverted index
@@ -275,7 +199,20 @@ object Dedup {
     */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, rowsPerBand: Int = 3,
-                      threshold: Double = 0.3): DataFrame = {
+                      threshold: Double = 0.3): DataFrame =
+    minHashLshPairsOfTokens(
+      df.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__tk")),
+      idCol, "__tk", n, rowsPerBand, threshold)
+
+  /** [[minHashLshPairs]] over an ALREADY-TOKENIZED corpus (a token-array
+    * column instead of raw text): the crawl funnel's near-dup stage
+    * (q263) tokenizes once in its single extraction pass and must not
+    * re-tokenize here. [[minHashLshPairs]] tokenizes and delegates
+    * here. */
+  def minHashLshPairsOfTokens(df: DataFrame, idCol: String,
+                              tokensCol: String, n: Int = 3,
+                              rowsPerBand: Int = 3,
+                              threshold: Double = 0.3): DataFrame = {
     // shingle strings are hashed once (60-bit, oracle-reproducible) and
     // never flow further: signatures, sizes, and the verify join all work
     // on the hash — at scale only fixed-width keys shuffle
@@ -283,25 +220,6 @@ object Dedup {
     // index feeds the signature aggregate, the size aggregate, and both
     // sides of the verify join — un-checkpointed, Spark re-derives it
     // per consumer (measured: 6 scans of the source at sf0.001)
-    val sh = df
-      .select(col(idCol).as("doc"), TextAnalysis.tokens(col(textCol)).as("__tk"))
-      .select(col("doc"),
-        explode(TextAnalysis.shinglesOfTokens(col("__tk"), n)).as("sg"))
-      .select(col("doc"), baseHash60(col("sg")).as("h"))
-      .distinct()
-      .localCheckpoint()
-    minHashLshPairsOverIndex(sh, rowsPerBand, threshold)
-  }
-
-  /** [[minHashLshPairs]] over an ALREADY-TOKENIZED corpus (a token-array
-    * column instead of raw text): the crawl funnel's near-dup stage
-    * (q263) tokenizes once in its single extraction pass and must not
-    * re-tokenize here — same signatures, bands, and verify as the text
-    * entry (both route through the shared index tail). */
-  def minHashLshPairsOfTokens(df: DataFrame, idCol: String,
-                              tokensCol: String, n: Int = 3,
-                              rowsPerBand: Int = 3,
-                              threshold: Double = 0.3): DataFrame = {
     val sh = df
       .select(col(idCol).as("doc"),
         explode(TextAnalysis.shinglesOfTokens(col(tokensCol), n)).as("sg"))
@@ -339,8 +257,7 @@ object Dedup {
     // exact verify restricted to candidates (bounded by LSH recall), with
     // the size-ratio bound (jaccard >= t ⇒ min(sz) >= t*max(sz)) applied
     // before intersections are counted
-    val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
-    val idx = sh.join(sizes, "doc")
+    val idx = ShingleIndex.withSizes(sh, Seq("doc"))
     cand
       .join(idx.as("sa"), col("doc_a") === col("sa.doc"))
       .join(idx.as("sb"),
@@ -498,23 +415,17 @@ object Dedup {
     * count, carried per row so the exact size-ratio prune runs inside
     * the candidate join. */
   def shingleIndex(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = 3): DataFrame = {
+                   n: Int = 3): DataFrame =
     // materialized once: the size aggregation AND the size-attach join
     // both read it, and without the cut the tokenize/explode/distinct
     // pipeline executes per consumer (the ngramJaccardPairs sh0
-    // rationale); only fixed-width (doc, h) rows are stored
-    // identity-only shingle hash — same swap as ngramJaccardPairs (r19);
-    // producers and consumers of the persisted index share this one
-    // code path, so the artifact stays internally consistent
-    val sh = df
-      .select(col(idCol).as("doc"),
-        TextAnalysis.tokenHashes(TextAnalysis.tokens(col(textCol))).as("__th"))
-      .select(col("doc"),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("h"))
-      .distinct()
-      .localCheckpoint()
-    sh.join(sh.groupBy(col("doc")).agg(count(lit(1)).as("sz")), "doc")
-  }
+    // rationale); only fixed-width (doc, h) rows are stored. Producers
+    // and consumers of the persisted index share ShingleIndex's one hash
+    // identity, so the artifact stays internally consistent.
+    ShingleIndex.withSizes(
+      ShingleIndex.build(df, Seq(col(idCol).as("doc")), col(textCol), n)
+        .localCheckpoint(),
+      Seq("doc"))
 
   /** Jaccard pairs of a batch index against a stored corpus index —
     * [[incrementalJaccardPairs]]' candidate join over PRE-SHINGLED
@@ -526,34 +437,14 @@ object Dedup {
     * only join key. */
   def jaccardPairsAgainstIndex(corpusIdx: DataFrame, batchIdx: DataFrame,
                                threshold: Double): DataFrame =
-    batchIdx.as("b")
-      .join(corpusIdx.as("c"),
-        col("b.h") === col("c.h") &&
-          least(col("b.sz"), col("c.sz")) >=
-            lit(threshold) * greatest(col("b.sz"), col("c.sz")))
-      .groupBy(col("b.doc").as("batch_doc"), col("c.doc").as("corpus_doc"),
-        col("b.sz").as("szb"), col("c.sz").as("szc"))
-      .agg(count(lit(1)).as("__c"))
-      .select(col("batch_doc"), col("corpus_doc"),
-        (col("__c") * lit(1.0) / (col("szb") + col("szc") - col("__c")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    ShingleIndex.jaccardPairs(batchIdx, corpusIdx, threshold,
+      "batch_doc", "corpus_doc", within = false)
 
   /** Jaccard pairs WITHIN one index (doc_a < doc_b) — the
     * [[ngramJaccardPairs]] tail over a pre-shingled frame. */
   def jaccardPairsWithinIndex(idx: DataFrame, threshold: Double): DataFrame =
-    idx.as("a")
-      .join(idx.as("b"),
-        col("a.h") === col("b.h") && col("a.doc") < col("b.doc") &&
-          least(col("a.sz"), col("b.sz")) >=
-            lit(threshold) * greatest(col("a.sz"), col("b.sz")))
-      .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-        col("a.sz").as("sza"), col("b.sz").as("szb"))
-      .agg(count(lit(1)).as("__c"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("__c") * lit(1.0) / (col("sza") + col("szb") - col("__c")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    ShingleIndex.jaccardPairs(idx, idx, threshold, "doc_a", "doc_b",
+      within = true)
 
   /** Incrementally extend a component labeling with a NEW batch of
     * nodes and the edges that touch it — the clustering counterpart of
@@ -817,16 +708,12 @@ object Dedup {
     */
   def removeDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
                            k: Int = 8): DataFrame = {
-    // identity-only window hash (the oracle groups by window TEXT):
-    // combine per-token xxhash64s instead of building each k-token
-    // window string and md5-hex-conv'ing it — no per-window string
-    // allocation, each token hashed once, not k times (r19, guide §1.2)
-    val base = df
-      .select(col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__tk"))
-      .select(col("doc_id"), col("__tk"),
-        TextAnalysis.tokenHashes(col("__tk")).as("__th"))
-      .select(col("doc_id"), col("__tk"),
-        TextAnalysis.windowHashesOfTokenHashes(col("__th"), k).as("__w"))
+    // ShingleIndex's identity-only window hash: the oracle groups by
+    // window TEXT, so no window string is ever built
+    val base = ShingleIndex.windowArrays(
+      df.select(col(idCol).as("doc_id"),
+        TextAnalysis.tokens(col(textCol)).as("__tk")),
+      Seq(col("doc_id"), col("__tk")), col("__tk"), k)
     val wins = base
       .select(col("doc_id"), posexplode(col("__w")).as(Seq("pos", "wh")))
     // duplicated-hash detection: aggregation + semi-join, never a window
@@ -905,16 +792,13 @@ object Dedup {
                             k: Int = 8): DataFrame = {
     // project the token array before the generator (see shinglesOfTokens
     // scaladoc: inlining it re-evaluates the split per element)
-    // identity-only window hash — same swap as removeDuplicateSpans
-    // (r19): the oracle groups by window TEXT, so the md5 chain over a
-    // built window string is replaced by one xxhash64 over k token
-    // hashes (each token hashed once)
-    val base = df
-      .select(col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__tk"))
-      .select(col("doc_id"), size(col("__tk")).cast("long").as("n_tokens"),
-        TextAnalysis.tokenHashes(col("__tk")).as("__th"))
-      .select(col("doc_id"), col("n_tokens"),
-        TextAnalysis.windowHashesOfTokenHashes(col("__th"), k).as("__w"))
+    // ShingleIndex's identity-only window hash, as in
+    // removeDuplicateSpans
+    val base = ShingleIndex.windowArrays(
+      df.select(col(idCol).as("doc_id"),
+        TextAnalysis.tokens(col(textCol)).as("__tk")),
+      Seq(col("doc_id"), size(col("__tk")).cast("long").as("n_tokens")),
+      col("__tk"), k)
     val wins = base
       .select(col("doc_id"), posexplode(col("__w")).as(Seq("pos", "wh")))
     // duplicated-hash detection is a hash AGGREGATION, not a window: a

@@ -35,18 +35,14 @@ object NgramModel {
   def ngramCommonness(candidates: DataFrame, reference: DataFrame,
                       idCol: String, textCol: String,
                       n: Int = 3): DataFrame = {
-    // identity-only n-gram hash (the oracle joins on n-gram TEXT): one
-    // xxhash64 over the n token hashes replaces the md5-hex-conv chain
-    // over a built n-gram string (r19 — guide §1.2 per-task work)
-    def grams(df: DataFrame): DataFrame = df
-      .select(col(idCol).as("doc_id"),
-        TextAnalysis.tokenHashes(TextAnalysis.tokens(col(textCol))).as("__th"))
-      .select(col("doc_id"),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("gh"))
-    val model = grams(reference).groupBy(col("gh"))
+    // n-gram occurrences by ShingleIndex's hash identity (the oracle
+    // joins on n-gram TEXT); repeats count, so no distinct
+    def grams(df: DataFrame): DataFrame =
+      ShingleIndex.windows(df, Seq(col(idCol).as("doc_id")), col(textCol), n)
+    val model = grams(reference).groupBy(col("h"))
       .agg(count(lit(1)).as("__mc"))
     val scored = grams(candidates)
-      .join(model, Seq("gh"), "left")
+      .join(model, Seq("h"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("total_ngrams"),
         count(col("__mc")).as("matched_ngrams"),

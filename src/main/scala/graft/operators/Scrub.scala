@@ -68,13 +68,8 @@ object Scrub {
   def decontaminate(train: DataFrame, eval: DataFrame,
                     idCol: String, textCol: String, n: Int = 5,
                     maxEvalShingles: Long = 1L << 22): DataFrame = {
-    // identity-only shingle hash (r19, the ngramJaccardPairs swap)
-    def shingleSet(df: DataFrame, cols: Column*): DataFrame = df
-      .withColumn("__tk", TextAnalysis.tokens(col(textCol)))
-      .withColumn("__th", TextAnalysis.tokenHashes(col("__tk")))
-      .select(cols :+ explode(
-        TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("sg"): _*)
-      .distinct()
+    def shingleSet(df: DataFrame, keys: Column*): DataFrame =
+      ShingleIndex.build(df, keys, col(textCol), n)
     val trainSh = shingleSet(train, col(idCol))
     val evalSh =
       if (maxEvalShingles <= 0) shingleSet(eval)
@@ -95,9 +90,9 @@ object Scrub {
               "maxEvalShingles=0 to allow a shuffle join")).isNull)
           .drop("__n_sg"))
       }
-    trainSh.join(evalSh, "sg")
+    trainSh.join(evalSh, "h")
       .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_hits")) // (id, sg) distinct ⇒ count = distinct shingles
+      .agg(count(lit(1)).as("n_hits")) // (id, h) distinct ⇒ count = distinct shingles
   }
 
   /** FUZZY benchmark decontamination: training documents within edit
@@ -146,13 +141,8 @@ object Scrub {
                          maxDistBp: Long = 3000L,
                          maxEvalDocs: Long = 1L << 20,
                          maxShingleDfFrac: Double = 0.0): DataFrame = {
-    // identity-only shingle hash (r19, the ngramJaccardPairs swap)
-    def shingleHashes(df: DataFrame, as: String): DataFrame = df
-      .withColumn("__tk", TextAnalysis.tokens(col(textCol)))
-      .withColumn("__th", TextAnalysis.tokenHashes(col("__tk")))
-      .select(col(idCol).as(as),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("__h"))
-      .distinct()
+    def shingleHashes(df: DataFrame, as: String): DataFrame =
+      ShingleIndex.build(df, Seq(col(idCol).as(as)), col(textCol), n)
     val trainSh0 = shingleHashes(train, "__tid")
     val trainSh =
       if (maxShingleDfFrac <= 0) trainSh0
@@ -160,16 +150,13 @@ object Scrub {
         // two plan consumers (the df aggregate and the anti-join probe
         // side) — materialize the tokenize/explode/distinct pipeline
         // once, the same eager-localCheckpoint trade as the Dedup pair
-        // family. Rows are distinct (doc, hash), so count-per-hash IS
-        // document frequency; the cap itself is the shared
-        // Dedup.viralHashes aggregation + anti-join.
+        // family. The cap itself is the shared ShingleIndex.capped.
         val t0 = trainSh0.localCheckpoint()
         val nTrain = train.agg(countDistinct(col(idCol)).as("__n"))
-        t0.join(Dedup.viralHashes(t0, "__h", Some(nTrain), 0L, maxShingleDfFrac),
-          Seq("__h"), "left_anti")
+        ShingleIndex.capped(t0, t0, Some(nTrain), 0L, maxShingleDfFrac)
       }
     val cand = trainSh
-      .join(shingleHashes(eval, "eval_id"), "__h")
+      .join(shingleHashes(eval, "eval_id"), "h")
       .select(col("__tid"), col("eval_id")).distinct()
     // the eval-body broadcast is ENFORCED-bounded, knnBruteForce-style:
     // the 1-row count is a stage dependency of the broadcast child, so
@@ -284,25 +271,17 @@ object Scrub {
       s"sourceOverlapMatrix saw $nGroups groups (> $maxGroups): the " +
         "intersection join fans out by |groups|^2 per shingle — bucket " +
         "the group column or raise maxGroups deliberately")
-    // identity-only shingle hash (r19): the hash only keys the
-    // intersection join — both engines count distinct common shingles
-    // through their own collision-free-on-data identity (the oracle its
-    // md5-60, this side one xxhash64 over the n token hashes), so the
-    // md5-hex-conv chain over built shingle strings is replaced by the
-    // fixed-width combine (guide §1.2; no per-window string allocation)
-    val sh = docs
-      .withColumn("__tk", TextAnalysis.tokens(col(textCol)))
-      .select(col(groupCol).as("__g"),
-        TextAnalysis.tokenHashes(col("__tk")).as("__th"))
-      .select(col("__g"),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("__h"))
-      .distinct()
+    // the hash only keys the intersection join — both engines count
+    // distinct common shingles through their own collision-free-on-data
+    // identity (the oracle its md5-60, this side ShingleIndex's)
+    val sh = ShingleIndex.build(docs, Seq(col(groupCol).as("__g")),
+        col(textCol), n)
       .localCheckpoint() // sizes AND both sides of the intersection join
     val sizes = groups.join(
         sh.groupBy(col("__g")).agg(count(lit(1)).as("__n0")),
         Seq("__g"), "left")
       .select(col("__g"), coalesce(col("__n0"), lit(0L)).as("__n"))
-    val inter = sh.as("a").join(sh.as("b"), Seq("__h"))
+    val inter = sh.as("a").join(sh.as("b"), Seq("h"))
       .where(col("a.__g") < col("b.__g"))
       .groupBy(col("a.__g").as("__ga"), col("b.__g").as("__gb"))
       .agg(count(lit(1)).as("n_common"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** EXACT set-similarity join via prefix filtering — the PPJoin family
@@ -41,74 +41,82 @@ import org.apache.spark.sql.functions._
   */
 object SetSimJoin {
 
+  private def requireThreshold(threshold: Double): Unit =
+    require(threshold > 0 && threshold <= 1,
+      s"threshold must be in (0, 1], got $threshold")
+
+  /** Per-doc hash array in (df ASC, h ASC) order from (doc, h, df) rows:
+    * (doc, arr, sz) — the one reassembly shuffle of a PPJoin build. */
+  private def orderedSets(withDf: DataFrame): DataFrame = withDf
+    .groupBy(col("doc"))
+    .agg(array_sort(collect_list(struct(col("df"), col("h")))).as("__ps"))
+    .select(col("doc"),
+      transform(col("__ps"), p => p("h")).as("arr"),
+      size(col("__ps")).cast("long").as("sz"))
+
+  /** Prefix rows (doc, sz, h): the first sz − ceil(t·sz) + 1 hashes of
+    * each rarest-first set — the only rows entering a candidate join. */
+  private def prefix(sets: DataFrame, threshold: Double): DataFrame =
+    sets.select(col("doc"), col("sz"),
+      explode(slice(col("arr"), lit(1),
+        (col("sz") - ceil(col("sz") * lit(threshold)) + 1).cast("int"))).as("h"))
+
+  /** Exact verify of candidate pairs (`l`, `r`): attach both sets and
+    * count the hash-based intersection, O(|a|+|b|) per pair — arrays
+    * join in only here. Output (l, r, __c, __sl, __sr). */
+  private def intersected(cand: DataFrame, l: String, lSets: DataFrame,
+                          r: String, rSets: DataFrame): DataFrame =
+    cand
+      .join(lSets.select(col("doc").as(l), col("arr").as("__al"),
+        col("sz").as("__sl")), l)
+      .join(rSets.select(col("doc").as(r), col("arr").as("__ar"),
+        col("sz").as("__sr")), r)
+      .select(col(l), col(r),
+        size(array_intersect(col("__al"), col("__ar"))).cast("long").as("__c"),
+        col("__sl"), col("__sr"))
+
+  /** [[intersected]] pairs whose Jaccard reaches `threshold`:
+    * (l, r, jaccard). */
+  private def verifiedJaccard(cand: DataFrame, l: String, lSets: DataFrame,
+                              r: String, rSets: DataFrame,
+                              threshold: Double): DataFrame = {
+    val jaccard = col("__c") * lit(1.0) / (col("__sl") + col("__sr") - col("__c"))
+    intersected(cand, l, lSets, r, rSets)
+      .filter(jaccard >= lit(threshold))
+      .select(col(l), col(r), jaccard.as("jaccard"))
+  }
+
   /** All document pairs with shingle-set Jaccard ≥ `threshold`, by
     * prefix-filtered candidate generation + exact verification.
     * Output: (doc_a, doc_b, jaccard), doc_a < doc_b. */
   def ppjoinPairs(df: DataFrame, idCol: String, textCol: String,
                   n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
+    requireThreshold(threshold)
     // (doc, h) distinct shingle-hash index — one tokenize/explode scan.
     // Materialized ONCE: it feeds the df count and the per-doc sort
     // (Spark re-plans the subtree per consumer; the ngramJaccardPairs
-    // lesson, measured in round 5 — and re-measured here in round 13:
-    // a narrow array_distinct(transform(..xxhash64..)) build benched
-    // 2.3× SLOWER than this explode+distinct form at sf0.1).
-    // identity-only shingle hash (r19, the ngramJaccardPairs swap): the
-    // oracle joins on shingle TEXT and the verify intersects full hash
-    // sets, so window identity = one xxhash64 over n token hashes
-    val sh = df
-      .select(col(idCol).as("doc"),
-        TextAnalysis.tokenHashes(TextAnalysis.tokens(col(textCol))).as("__th"))
-      .select(col("doc"),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("h"))
-      .distinct()
+    // lesson). The verify intersects full hash sets, so ShingleIndex's
+    // window identity is all the join needs.
+    val sh = ShingleIndex.build(df, Seq(col(idCol).as("doc")), col(textCol), n)
       .localCheckpoint()
-    // global df per hash — ONE map-side-combined aggregation (a viral
-    // hash never routes to one task the way a count-over-window would);
-    // distinct-hash-bounded, so AQE broadcasts it back in the common
-    // case and the join below stays narrow
-    val dfreq = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    // per-doc hash array in (df ASC, h ASC) order — the one reassembly
-    // shuffle of the build. Materialized: feeds the prefix explode AND
+    // global df per hash — distinct-hash-bounded, so AQE broadcasts it
+    // back in the common case and the join below stays narrow. The
+    // ordered sets are materialized: they feed the prefix explode AND
     // both verify joins.
-    val sets = sh.join(dfreq, "h")
-      .groupBy(col("doc"))
-      .agg(array_sort(collect_list(struct(col("df"), col("h")))).as("__ps"))
-      .select(col("doc"),
-        transform(col("__ps"), p => p("h")).as("arr"),
-        size(col("__ps")).cast("long").as("sz"))
+    val sets = orderedSets(sh.join(ShingleIndex.docFreq(sh), "h"))
       .localCheckpoint()
-    // prefix: first sz − ceil(t·sz) + 1 hashes (rarest-first) — the
-    // only rows entering the self-join
-    val prefix = sets.select(col("doc"), col("sz"),
-      explode(slice(col("arr"), lit(1),
-        (col("sz") - ceil(col("sz") * lit(threshold)) + 1).cast("int"))).as("h"))
+    val pre = prefix(sets, threshold)
     // candidate pairs: shared prefix hash + exact size-ratio bound
     // (J ≥ t ⇒ min(sz) ≥ t·max(sz)), deduplicated before any array
     // ships anywhere
-    val cand = prefix.as("a")
-      .join(prefix.as("b"),
+    val cand = pre.as("a")
+      .join(pre.as("b"),
         col("a.h") === col("b.h") && col("a.doc") < col("b.doc") &&
           least(col("a.sz"), col("b.sz")) >=
             lit(threshold) * greatest(col("a.sz"), col("b.sz")))
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
       .distinct()
-    // exact verify: hash-based intersection of the two sorted arrays,
-    // O(|a|+|b|) per candidate pair — arrays join in only here
-    cand
-      .join(sets.select(col("doc").as("doc_a"), col("arr").as("__aa"),
-        col("sz").as("__sa")), "doc_a")
-      .join(sets.select(col("doc").as("doc_b"), col("arr").as("__ab"),
-        col("sz").as("__sb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("__aa"), col("__ab"))).cast("long").as("__c"),
-        col("__sa"), col("__sb"))
-      .filter(col("__c") * lit(1.0) / (col("__sa") + col("__sb") - col("__c"))
-        >= lit(threshold))
-      .select(col("doc_a"), col("doc_b"),
-        (col("__c") * lit(1.0) / (col("__sa") + col("__sb") - col("__c")))
-          .as("jaccard"))
+    verifiedJaccard(cand, "doc_a", sets, "doc_b", sets, threshold)
   }
 
   /** CONTAINMENT pairs: (inner, outer) where the inner document's
@@ -125,44 +133,21 @@ object SetSimJoin {
     * emit. Output: (inner_doc, outer_doc, containment). */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    // identity-only shingle hash — the ppjoinPairs swap (r19)
-    val sh = df
-      .select(col(idCol).as("doc"),
-        TextAnalysis.tokenHashes(TextAnalysis.tokens(col(textCol))).as("__th"))
-      .select(col("doc"),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("h"))
-      .distinct()
+    requireThreshold(threshold)
+    val sh = ShingleIndex.build(df, Seq(col(idCol).as("doc")), col(textCol), n)
       .localCheckpoint()
-    val dfreq = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val sets = sh.join(dfreq, "h")
-      .groupBy(col("doc"))
-      .agg(array_sort(collect_list(struct(col("df"), col("h")))).as("__ps"))
-      .select(col("doc"),
-        transform(col("__ps"), p => p("h")).as("arr"),
-        size(col("__ps")).cast("long").as("sz"))
+    val sets = orderedSets(sh.join(ShingleIndex.docFreq(sh), "h"))
       .localCheckpoint()
-    val innerPrefix = sets.select(col("doc"), col("sz"),
-      explode(slice(col("arr"), lit(1),
-        (col("sz") - ceil(col("sz") * lit(threshold)) + 1).cast("int"))).as("h"))
     // candidate = inner prefix hash appearing ANYWHERE in the outer set
-    val cand = innerPrefix.as("i")
+    val cand = prefix(sets, threshold).as("i")
       .join(sh.as("o"),
         col("i.h") === col("o.h") && col("i.doc") =!= col("o.doc"))
       .select(col("i.doc").as("inner_doc"), col("o.doc").as("outer_doc"))
       .distinct()
-    cand
-      .join(sets.select(col("doc").as("inner_doc"), col("arr").as("__ai"),
-        col("sz").as("__si")), "inner_doc")
-      .join(sets.select(col("doc").as("outer_doc"), col("arr").as("__ao")),
-        "outer_doc")
+    intersected(cand, "inner_doc", sets, "outer_doc", sets)
+      .filter(col("__c") >= ceil(col("__sl") * lit(threshold)))
       .select(col("inner_doc"), col("outer_doc"),
-        size(array_intersect(col("__ai"), col("__ao"))).cast("long").as("__c"),
-        col("__si"))
-      .filter(col("__c") >= ceil(col("__si") * lit(threshold)))
-      .select(col("inner_doc"), col("outer_doc"),
-        (col("__c") * lit(1.0) / col("__si")).as("containment"))
+        (col("__c") * lit(1.0) / col("__sl")).as("containment"))
   }
 
   /** Incremental form — the production shape (q61's framing): a new
@@ -177,56 +162,30 @@ object SetSimJoin {
   def ppjoinProbe(corpus: DataFrame, batch: DataFrame, idCol: String,
                   textCol: String, n: Int = 3,
                   threshold: Double = 0.5): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0, 1], got $threshold")
-    // identity-only shingle hash — the ppjoinPairs swap (r19)
-    def shOf(df: DataFrame) = df
-      .select(col(idCol).as("doc"),
-        TextAnalysis.tokenHashes(TextAnalysis.tokens(col(textCol))).as("__th"))
-      .select(col("doc"),
-        explode(TextAnalysis.windowHashesOfTokenHashes(col("__th"), n)).as("h"))
-      .distinct()
-      .localCheckpoint()
+    requireThreshold(threshold)
+    def shOf(df: DataFrame) =
+      ShingleIndex.build(df, Seq(col(idCol).as("doc")), col(textCol), n)
+        .localCheckpoint()
     // the corpus and batch index builds (and below, the two ordered-set
     // reassemblies) are independent eager checkpoints — overlap each
     // pair on Par's pool (r20, guide §2.6): the small batch build rides
     // alongside the dominant corpus build instead of queueing behind it
     val Seq(shC, shB) = graft.Par.eval[DataFrame](Seq(
       () => shOf(corpus), () => shOf(batch)))
-    val dfreq = shC.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    def setsOf(sh: DataFrame) = sh
+    val dfreq = ShingleIndex.docFreq(shC)
+    def setsOf(sh: DataFrame) = orderedSets(sh
       .join(dfreq, Seq("h"), "left")
-      .select(col("doc"), col("h"), coalesce(col("df"), lit(0L)).as("df"))
-      .groupBy(col("doc"))
-      .agg(array_sort(collect_list(struct(col("df"), col("h")))).as("__ps"))
-      .select(col("doc"),
-        transform(col("__ps"), p => p("h")).as("arr"),
-        size(col("__ps")).cast("long").as("sz"))
+      .select(col("doc"), col("h"), coalesce(col("df"), lit(0L)).as("df")))
       .localCheckpoint()
     val Seq(setsC, setsB) = graft.Par.eval[DataFrame](Seq(
       () => setsOf(shC), () => setsOf(shB)))
-    def prefixOf(sets: DataFrame) = sets.select(col("doc"), col("sz"),
-      explode(slice(col("arr"), lit(1),
-        (col("sz") - ceil(col("sz") * lit(threshold)) + 1).cast("int"))).as("h"))
-    val cand = prefixOf(setsB).as("b")
-      .join(prefixOf(setsC).as("c"),
+    val cand = prefix(setsB, threshold).as("b")
+      .join(prefix(setsC, threshold).as("c"),
         col("b.h") === col("c.h") &&
           least(col("b.sz"), col("c.sz")) >=
             lit(threshold) * greatest(col("b.sz"), col("c.sz")))
       .select(col("b.doc").as("batch_doc"), col("c.doc").as("corpus_doc"))
       .distinct()
-    cand
-      .join(setsB.select(col("doc").as("batch_doc"), col("arr").as("__ab"),
-        col("sz").as("__sb")), "batch_doc")
-      .join(setsC.select(col("doc").as("corpus_doc"), col("arr").as("__ac"),
-        col("sz").as("__sc")), "corpus_doc")
-      .select(col("batch_doc"), col("corpus_doc"),
-        size(array_intersect(col("__ab"), col("__ac"))).cast("long").as("__c"),
-        col("__sb"), col("__sc"))
-      .filter(col("__c") * lit(1.0) / (col("__sb") + col("__sc") - col("__c"))
-        >= lit(threshold))
-      .select(col("batch_doc"), col("corpus_doc"),
-        (col("__c") * lit(1.0) / (col("__sb") + col("__sc") - col("__c")))
-          .as("jaccard"))
+    verifiedJaccard(cand, "batch_doc", setsB, "corpus_doc", setsC, threshold)
   }
 }
