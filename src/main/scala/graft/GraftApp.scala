@@ -38,6 +38,9 @@ import graft.streaming.DnstapPipeline
   * resumes under these. Spark relies on `rename` being atomic, which
   * POSIX `rename(2)` is locally and HDFS's rename is too. The W2
   * matcher's RocksDB state uploads go through the same manager.
+  *
+  * `spark.sql.shuffle.partitions` (`SPARK_GRAFT_SHUFFLE_PARTITIONS`, 32)
+  * sizes only W2's state store: W1 aggregates each batch in one task.
   */
 object Main {
   def main(args: Array[String]): Unit = {

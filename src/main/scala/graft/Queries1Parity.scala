@@ -52,7 +52,7 @@ private[graft] trait Queries1Parity extends QueriesBase {
   // ---------------------------------------------------------------------
   // q2/q3 — the reference's core operator: multi-grouping-set dedup count
   // with __ANY__ sentinel (A1/A2, aggregator.go:240-330), on the events→DNS
-  // analog mapping. One Expand + one shuffle (see GroupingSetCounter).
+  // analog mapping. One generator + one shuffle (see GroupingSetCounter).
   // ---------------------------------------------------------------------
   private[graft] def q2QueryGroupingSets(spark: SparkSession, dir: String): DataFrame =
     GroupingSetCounter(DnsAnalog.queries(Tables.events(spark, dir)),

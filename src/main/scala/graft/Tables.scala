@@ -114,7 +114,6 @@ object Tables {
   def lineitem(spark: SparkSession, d: String): DataFrame = load(spark, d, "lineitem")
   def orders(spark: SparkSession, d: String): DataFrame = load(spark, d, "orders")
   def customer(spark: SparkSession, d: String): DataFrame = load(spark, d, "customer")
-  def supplier(spark: SparkSession, d: String): DataFrame = load(spark, d, "supplier")
   def part(spark: SparkSession, d: String): DataFrame = load(spark, d, "part")
   def nation(spark: SparkSession, d: String): DataFrame = load(spark, d, "nation")
   def region(spark: SparkSession, d: String): DataFrame = load(spark, d, "region")

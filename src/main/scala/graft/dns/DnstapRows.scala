@@ -21,11 +21,6 @@ final case class ResponseRow(
     queryAddress: String, queryPort: Int, questionName: String,
     questionType: String, id: Int, isSuccess: Boolean, counter: Long)
 
-/** Matched-latency sample (SURVEY §1.1 ResponseTimeSample). */
-final case class ResponseTimeSampleRow(
-    responseTime: Timestamp, identity: String,
-    responseTimeMicroSec: Long, counter: Long)
-
 object DnstapRows {
 
   private def ts(sec: Option[Long], nsec: Option[Int], now: () => Instant): Timestamp =

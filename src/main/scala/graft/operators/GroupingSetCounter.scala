@@ -9,11 +9,13 @@ import org.apache.spark.sql.functions._
   * counted under up to three groupings simultaneously, with collapsed
   * columns replaced by the sentinel `__ANY__` (aggregator.go:32).
   *
-  * Spark-first shape: a single native GROUPING SETS aggregation — Catalyst
-  * plans one `Expand` (×|sets| rows) feeding a partial `HashAggregate`
-  * before the shuffle, so the map-side combine collapses duplicates before
-  * any network movement; far cheaper at scale than a union of three
-  * groupBys (3 scans / 3 shuffles).
+  * Spark-first shape: each row becomes one struct per enabled set
+  * (`inline(array(struct(...)))`, collapsed columns already `__ANY__`, a
+  * set index keeping a real `"__ANY__"` apart) and one `groupBy` counts
+  * them. Unlike `Expand`, the generator keeps its child's partitioning:
+  * over one partition (a coalesced W1 batch) both aggregate phases run in
+  * one task with no exchange; over many (q2/q3) the partial aggregate
+  * collapses duplicates before the one shuffle.
   *
   * Semantics notes (SURVEY §2.5):
   *   - counter is `count(*)` of input rows (ingest seeds counter=1, P8);
@@ -39,22 +41,20 @@ object GroupingSetCounter {
             groupbyQuestion: Boolean = true,
             groupbyQueryAddress: Boolean = true): DataFrame = {
     val all = fixed ++ address ++ question
-    val collapsible = address ++ question
     val sets: Seq[Seq[String]] = Seq(
       if (writeUngrouped) Some(all) else None,
       if (groupbyQuestion) Some(fixed ++ address) else None,
       if (groupbyQueryAddress) Some(fixed ++ question) else None).flatten
     require(sets.nonEmpty, "at least one grouping set must be enabled")
 
-    // grouping() is only valid inside the aggregate, so emit one flag per
-    // collapsible column and substitute the sentinel in a post-projection.
-    val aggs = count(lit(1)).as("counter") +: min(col(tsCol)).as(tsOut) +:
-      collapsible.map(c => grouping(col(c)).as(s"__g_$c"))
-    df.groupingSets(sets.map(_.map(col)), all.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .select(fixed.map(col) ++
-        collapsible.map(c =>
-          when(col(s"__g_$c") === 1, lit(AnyTag)).otherwise(col(c)).as(c)) ++
-        Seq(col("counter"), col(tsOut)): _*)
+    val expanded = sets.zipWithIndex.map { case (set, i) =>
+      struct(lit(i).as("__set") +:
+        all.map(c => (if (set.contains(c)) col(c) else lit(AnyTag)).as(c)) :+
+        col(tsCol).as(tsOut): _*)
+    }
+    df.select(inline(array(expanded: _*)))
+      .groupBy(("__set" +: all).map(col): _*)
+      .agg(count(lit(1)).as("counter"), min(col(tsOut)).as(tsOut))
+      .drop("__set")
   }
 }

@@ -26,11 +26,6 @@ object TextAnalysis {
         i => concat_ws(" ", (0 until n).map(k => element_at(tk, i + lit(k))): _*)))
       .otherwise(array().cast("array<string>"))
 
-  /** Sliding n-token shingles ("n-grams of tokens"), the unit for
-    * near-duplicate detection; empty when the doc has fewer than n tokens. */
-  def shingles(text: Column, n: Int = 3): Column =
-    shinglesOfTokens(tokens(text), n)
-
   /** Per-token 64-bit hashes — project into a real column before
     * feeding [[windowHashesOfTokenHashes]] (the [[shinglesOfTokens]]
     * materialization discipline: inlined, CollapseProject would

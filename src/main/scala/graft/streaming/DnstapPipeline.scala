@@ -20,6 +20,8 @@ import graft.sinks.BatchSink
   *     per-trigger grouping-set aggregation of client queries and non-OK
   *     client responses inside `foreachBatch` — per-batch aggregation IS
   *     the reference's clear-on-flush semantics (aggregator.go:424,446).
+  *     Each leg decodes, aggregates and writes a batch in one task (one
+  *     Spark job, no shuffle), like the reference's single aggregator.
   *     The query leg and the response leg run concurrently (`Par.eval`,
   *     on threads that inherit the batch's job group and batch id); the
   *     first leg to fail cancels the other and fails the batch;
@@ -194,13 +196,14 @@ object DnstapPipeline {
     frames.flatMap(b => DnstapCodec.decode(b).toSeq.flatMap(DnstapRows.toQueryRows(_))).toDF()
   }
 
-  /** A1 (or A3 pass-through when aggregate=false) on a micro-batch. */
+  /** A1 (or A3 pass-through when aggregate=false) on a micro-batch, in one
+    * task: over one partition the counter plans no shuffle. */
   def aggregateQueries(rows: DataFrame, cfg: Config): DataFrame =
     if (!cfg.aggregate)
       rows.select(col("queryTime"), col("identity"), col("queryAddress"),
         col("questionName"), col("questionType"), col("counter"))
     else
-      GroupingSetCounter(rows,
+      GroupingSetCounter(rows.coalesce(1),
         fixed = Seq("identity"), address = Seq("queryAddress"),
         question = Seq("questionName", "questionType"),
         tsCol = "queryTime", tsOut = "queryTime",
@@ -215,7 +218,7 @@ object DnstapPipeline {
         col("queryAddress"), col("questionName"), col("questionType"),
         col("counter"))
     else
-      GroupingSetCounter(rows,
+      GroupingSetCounter(rows.coalesce(1),
         fixed = Seq("identity", "responseStatus"), address = Seq("queryAddress"),
         question = Seq("questionName", "questionType"),
         tsCol = "responseTime", tsOut = "responseTime",

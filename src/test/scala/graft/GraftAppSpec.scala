@@ -10,7 +10,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.storage.StorageLevel
 
@@ -315,6 +315,81 @@ class GraftAppSpec extends SparkSpec {
           s"batch $batch jobs per leg: $n")
       }
       assert(!Files.exists(Paths.get(s"$root/out/_dead_letter")))
+    } finally {
+      queries.foreach(_.stop())
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("each W1 batch runs one Spark job per leg, shuffles nothing and writes one file per table") {
+    val root = Files.createTempDirectory("graft-app-shape")
+    val sock = root.resolve("d.sock").toString
+    val cfg = GraftConfig.fromToml(
+      s"""[Dnstap]
+         |UnixSocket = "$sock"
+         |ClientResponseTimeSamples = false
+         |""".stripMargin)
+    val a = Array[Byte](10, 0, 0, 1)
+    val frames = (0 until 40).map(i => frame(isResponse = false, a, 1000, i, s"n$i.example.", 0, 1000L)) ++
+      (0 until 3).map(i => frame(isResponse = true, a, 1000, i, s"n$i.example.", 3, 1001L))
+
+    // jobs and shuffle-write bytes per (job group, batch id); a streaming
+    // query's job group is its run id
+    val jobs = new ConcurrentHashMap[(String, String), Int]()
+    val shuffled = new ConcurrentHashMap[(String, String), Long]()
+    val stageBatch = new ConcurrentHashMap[Int, (String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties).getOrElse(new java.util.Properties())
+        val key = (p.getProperty("spark.jobGroup.id", ""), p.getProperty("streaming.sql.batchId", ""))
+        jobs.merge(key, 1, _ + _)
+        e.stageIds.foreach(stageBatch.put(_, key))
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(stageBatch.get(e.stageInfo.stageId)).foreach { key =>
+          shuffled.merge(key, e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten, _ + _)
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    // more shuffle partitions than cores, as in a deployment: a W1 batch
+    // must plan no shuffle at all, so none of them is used
+    val cores = sc.defaultParallelism
+    val queries = withShufflePartitions(8 * cores) {
+      GraftApp.start(spark, cfg,
+        outputDir = s"$root/out", checkpointDir = s"$root/ckpt", instantTriggers = true)
+    }
+    try {
+      val Seq(agg) = queries
+      emit(sock, frames)
+      def committed = agg.recentProgress.exists(_.sources.exists(_.endOffset == frames.size.toString))
+      val end = System.nanoTime() + 90L * 1000000000L
+      while (!committed && System.nanoTime() < end) {
+        agg.exception.foreach(e => throw e)
+        Thread.sleep(100)
+      }
+      assert(committed, "the frames' batches did not commit in 90 s")
+      // a marker job run now shows that the listener has seen every batch job
+      val marker = s"marker-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val seen = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.containsKey((marker, "")) && System.nanoTime() < seen) Thread.sleep(10)
+      assert(jobs.containsKey((marker, "")), "the listener never saw the marker job")
+
+      val batches = agg.recentProgress.toSeq.filter(_.numInputRows > 0).map(_.batchId.toString)
+      assert(batches.nonEmpty)
+      batches.foreach { b =>
+        val key = (agg.runId.toString, b)
+        assert(jobs.getOrDefault(key, 0) == 2, s"batch $b ran ${jobs.get(key)} jobs, not one per leg")
+        assert(shuffled.getOrDefault(key, 0L) == 0L, s"batch $b wrote ${shuffled.get(key)} shuffle bytes")
+        Seq("clientQuery", "clientResponse").foreach { t =>
+          val files = Files.list(Paths.get(s"$root/out/$t/__batch_id=$b"))
+          val parts = try files.iterator().asScala.map(_.getFileName.toString)
+            .count(f => f.startsWith("part-") && f.endsWith(".parquet")) finally files.close()
+          assert(parts == 1, s"$t/__batch_id=$b holds $parts part files")
+        }
+      }
     } finally {
       queries.foreach(_.stop())
       sc.removeSparkListener(listener)
